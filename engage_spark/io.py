@@ -2118,7 +2118,11 @@ def optimize_dataset(
     ceil(total_bytes / target) files, each covering a small rectangle
     in the clustered columns' space, so footer stats prune on every
     dimension. One shuffle total (the Z range partitioning doubles as
-    the compaction re-bucketing). Returns the file count targeted."""
+    the compaction re-bucketing). ``total_bytes`` is the summed on-disk
+    length of the source's data files (``inputFiles()``). Returns the
+    file count targeted, ``max(1, ceil(total_bytes / target_file_bytes))``;
+    the files actually written may be fewer (range partitioning can
+    yield fewer non-empty partitions than asked)."""
     import math
 
     df = spark.read.parquet(src)

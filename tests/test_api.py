@@ -1391,8 +1391,13 @@ def test_optimize_dataset_sizes_and_clusters(spark, tmp_path):
     )
     df.repartition(40).write.parquet(src)  # 40 undersized files
     total = sum(os.path.getsize(p) for p in glob.glob(f"{src}/*.parquet"))
+    assert total > 56
+    # Ceiling divisor t = ceil(total/8): 8t >= total gives total/t <= 8,
+    # and t < total/8 + 1 gives total/t > 8*total/(total+8) > 7 once
+    # total > 56, so ceil(total/t) is exactly 8 whatever the byte total.
+    # (A floor divisor gives 9 whenever total % 8 != 0.)
     n = optimize_dataset(
-        spark, src, dst, ["a", "b"], target_file_bytes=total // 8, bits=9
+        spark, src, dst, ["a", "b"], target_file_bytes=-(-total // 8), bits=9
     )
     out_files = glob.glob(f"{dst}/*.parquet")
     assert n == 8

@@ -196,6 +196,15 @@ def emit_result(payload: dict, out_path: str | None = None) -> str:
     return line
 
 
+def run_fields(spark) -> dict:
+    """The resolved run configuration recorded beside the timings: the
+    parallelism Spark actually runs with (``local[*]`` resolved to the
+    machine's cores) and the master URL. Added as new keys only — the
+    existing keys, the stdout line and the timed region are unchanged."""
+    sc = spark.sparkContext
+    return {"cpus": int(sc.defaultParallelism), "master": sc.master}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -296,6 +305,7 @@ def main() -> None:
         "baseline_subset_n": len(r1_ok),
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        **run_fields(spark),
     })
     spark.stop()
 

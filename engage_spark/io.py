@@ -10,11 +10,15 @@ pruning instead of filename string-matching.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+_log = logging.getLogger(__name__)
 
 
 def _xxhash64able(dt: T.DataType) -> bool:
@@ -418,6 +422,7 @@ def append_dataset(
                 f"{list(partition_by or [])}; a mismatched append would "
                 "leave a mixed layout that readers silently truncate"
             )
+        df = _gate_write_schema(spark, path, df, skip=existing)
 
     vlog = version_log_enabled(spark, path)
     gate_rules = None
@@ -1684,80 +1689,94 @@ def _zorder_scale_frozen(
     2^53 would bucket approximately — the build-side overflow guard
     keeps bits*span inside long range long before that matters.)"""
     bits = meta["bits"]
+    if meta["scale"] == "minmax":
+        # one parsed expression per column and two projections in all:
+        # each withColumn re-analyzes the whole plan (~20 ms of driver
+        # time apiece). The slot is the least/greatest clamp,
+        # (v - lo) * (2^bits - 1) cast to bigint, `div` the span.
+        slots = []
+        for i, c in enumerate(meta["cols"]):
+            lo, hi = meta["lo"][c], meta["hi"][c]
+            q = "`" + c.replace("`", "``") + "`"
+            slots.append(
+                F.expr(
+                    f"CAST((least(greatest({q}, {lo}), {hi}) - {lo}) * "
+                    f"{(1 << bits) - 1} AS BIGINT) div {max(1, hi - lo)}"
+                ).alias(f"__zs{i}")
+            )
+        scaled = [f"__zs{i}" for i in range(len(slots))]
+        cols = [
+            f"`{c.replace('`', '``')}`"
+            for c in df.columns
+            if c != "__z" and c not in scaled  # replaced, as withColumn did
+        ]
+        return df.select(*cols, *slots).select(
+            *cols, zorder_column(scaled, bits).alias("__z")
+        )
     scaled, tmp = [], []
     bounds_rows = None  # all columns' boundary rows, loaded at most once
     for i, c in enumerate(meta["cols"]):
-        if meta["scale"] == "minmax":
-            lo, hi = meta["lo"][c], meta["hi"][c]
-            span = max(1, hi - lo)
-            clamped = F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi))
-            df = df.withColumn(
-                f"__zn{i}",
-                ((clamped - F.lit(lo)) * F.lit((1 << bits) - 1)).cast("long"),
-            ).withColumn(f"__zs{i}", F.expr(f"__zn{i} div {span}"))
-            tmp += [f"__zn{i}", f"__zs{i}"]
-        else:
-            from pyspark.ml.feature import Bucketizer
+        from pyspark.ml.feature import Bucketizer
 
+        if bounds_rows is None:
+            # ONE driver-side pyarrow read serves every rank
+            # column (bounded: ≤ 2^bits occupied slots per column);
+            # the per-column Spark filter+collect it replaces was
+            # ~0.5 s of job scheduling per column per maintenance
+            # op (r15 optimization round). Spark read stays the
+            # fallback for filesystems pyarrow can't reach.
+            from engage_spark.versioning import _pa_read_small
+
+            bounds_rows = _pa_read_small(
+                spark, f"{path}/_zorder_meta/bounds"
+            )
             if bounds_rows is None:
-                # ONE driver-side pyarrow read serves every rank
-                # column (bounded: ≤ 2^bits occupied slots per column);
-                # the per-column Spark filter+collect it replaces was
-                # ~0.5 s of job scheduling per column per maintenance
-                # op (r15 optimization round). Spark read stays the
-                # fallback for filesystems pyarrow can't reach.
-                from engage_spark.versioning import _pa_read_small
+                bounds_rows = [
+                    r.asDict()
+                    for r in spark.read.parquet(
+                        f"{path}/_zorder_meta/bounds"
+                    ).collect()
+                ]
+        rows = [r for r in bounds_rows if r["__ci"] == i]
+        null_slot = next(
+            (int(r["__s"]) for r in rows if r["__b"] is None), None
+        )
+        finite = sorted(
+            (int(r["__b"]), int(r["__s"]))
+            for r in rows
+            if r["__b"] is not None
+        )
+        if null_slot is None:
+            null_slot = finite[0][1] if finite else 0
+        if not finite:
+            # empty build (no occupied slots — the dataset was
+            # written from zero rows): every value lands on slot 0;
+            # Bucketizer would reject the degenerate [-inf, inf]
+            df = df.withColumn(f"__zs{i}", F.lit(0).cast("long"))
+            tmp.append(f"__zs{i}")
+            scaled.append(f"__zs{i}")
+            continue
+        splits = (
+            [float("-inf")]
+            + [float(b) for b, _ in finite[1:]]
+            + [float("inf")]
+        )
+        df = Bucketizer(
+            splits=splits,
+            inputCol=f"__bv{i}",
+            outputCol=f"__bk{i}",
+            handleInvalid="keep",  # NULL -> extra bucket len(splits)-1
+        ).transform(df.withColumn(f"__bv{i}", F.col(c).cast("double")))
+        from engage_spark.session import local_frame
 
-                bounds_rows = _pa_read_small(
-                    spark, f"{path}/_zorder_meta/bounds"
-                )
-                if bounds_rows is None:
-                    bounds_rows = [
-                        r.asDict()
-                        for r in spark.read.parquet(
-                            f"{path}/_zorder_meta/bounds"
-                        ).collect()
-                    ]
-            rows = [r for r in bounds_rows if r["__ci"] == i]
-            null_slot = next(
-                (int(r["__s"]) for r in rows if r["__b"] is None), None
-            )
-            finite = sorted(
-                (int(r["__b"]), int(r["__s"]))
-                for r in rows
-                if r["__b"] is not None
-            )
-            if null_slot is None:
-                null_slot = finite[0][1] if finite else 0
-            if not finite:
-                # empty build (no occupied slots — the dataset was
-                # written from zero rows): every value lands on slot 0;
-                # Bucketizer would reject the degenerate [-inf, inf]
-                df = df.withColumn(f"__zs{i}", F.lit(0).cast("long"))
-                tmp.append(f"__zs{i}")
-                scaled.append(f"__zs{i}")
-                continue
-            splits = (
-                [float("-inf")]
-                + [float(b) for b, _ in finite[1:]]
-                + [float("inf")]
-            )
-            df = Bucketizer(
-                splits=splits,
-                inputCol=f"__bv{i}",
-                outputCol=f"__bk{i}",
-                handleInvalid="keep",  # NULL -> extra bucket len(splits)-1
-            ).transform(df.withColumn(f"__bv{i}", F.col(c).cast("double")))
-            from engage_spark.session import local_frame
-
-            smap = local_frame(
-                spark,
-                [(float(k), int(s)) for k, (_, s) in enumerate(finite)]
-                + [(float(len(splits) - 1), int(null_slot))],
-                f"__bk{i} double, __zs{i} long",
-            )
-            df = df.join(F.broadcast(smap), on=f"__bk{i}", how="left")
-            tmp += [f"__bv{i}", f"__bk{i}", f"__zs{i}"]
+        smap = local_frame(
+            spark,
+            [(float(k), int(s)) for k, (_, s) in enumerate(finite)]
+            + [(float(len(splits) - 1), int(null_slot))],
+            f"__bk{i} double, __zs{i} long",
+        )
+        df = df.join(F.broadcast(smap), on=f"__bk{i}", how="left")
+        tmp += [f"__bv{i}", f"__bk{i}", f"__zs{i}"]
         scaled.append(f"__zs{i}")
     return df.withColumn("__z", zorder_column(scaled, bits)).drop(*tmp)
 
@@ -1813,6 +1832,7 @@ def zorder_append(
             f"{missing} (index at {path} is ordered on {m['cols']}, "
             f"partitioned by {part_cols})"
         )
+    df = _gate_write_schema(spark, path, df, skip=part_cols)
     from engage_spark.versioning import version_log_enabled
 
     vlog = version_log_enabled(spark, path)
@@ -1897,7 +1917,7 @@ def zorder_append(
 
         fs, p = _hadoop_fs(spark, path)
         rootp = fs.makeQualified(p).toUri().getPath().rstrip("/")
-        live = set(spark.read.parquet(path).inputFiles())
+        live = _input_files(spark, path)
         fset = set(final_names)
         new_uris = {
             u for u in live if urlparse(u).path[len(rootp) + 1:] in fset
@@ -1931,15 +1951,84 @@ def zorder_append(
 _ZRANGES = "_zorder_ranges"
 
 
+# _zranges_pa's bounds: the file count (the stats/bloom harvests'
+# driver limit) and the rows read, two int64 columns each on the driver
+_ZRANGES_DRIVER_MAX = 256
+_ZRANGES_DRIVER_ROWS = 2_000_000
+
+
+def _zranges_pa(uris: list, m: dict) -> list | None:
+    """[(file_uri, z_lo, z_hi)] computed on the driver — the
+    ``_zranges_scan`` twin for a bounded file set on a minmax curve
+    over bigint columns. Reads only the clustered columns with pyarrow
+    and replays the frozen scaling and the bit interleave in int64
+    numpy: clamp to [lo, hi] (a NULL scales as lo, as Spark's
+    ``greatest`` skips it), ``(v - lo) * (2^bits - 1)`` integer-divided
+    by the span, bit b of column i to bit ``n*b + i`` — the integer
+    arithmetic of Spark's expression, so every range is exact. A
+    zero-row file has no range, as ``input_file_name`` gives it none.
+    None (the caller runs the Spark scan) for a rank curve, a column
+    that is not bigint, more than ``_ZRANGES_DRIVER_MAX`` files or
+    ``_ZRANGES_DRIVER_ROWS`` rows, or any read failure."""
+    if m["scale"] != "minmax" or len(uris) > _ZRANGES_DRIVER_MAX:
+        return None
+    try:
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from engage_spark.versioning import _pa_fs_for
+
+        cols, bits = m["cols"], m["bits"]
+        mult, rows, out = (1 << bits) - 1, 0, []
+        for uri in uris:
+            fs, p = _pa_fs_for(uri)
+            with fs.open_input_file(p) as fh:
+                pf = pq.ParquetFile(fh)
+                rows += pf.metadata.num_rows
+                if rows > _ZRANGES_DRIVER_ROWS:
+                    return None
+                if pf.metadata.num_rows == 0:
+                    continue
+                tbl = pf.read(columns=cols)
+            z = np.zeros(tbl.num_rows, dtype=np.int64)
+            for i, c in enumerate(cols):
+                col = tbl.column(c)
+                if not pa.types.is_int64(col.type):
+                    return None
+                lo, hi = m["lo"][c], m["hi"][c]
+                v = np.clip(col.fill_null(lo).to_numpy(), lo, hi)
+                scaled = (v - lo) * mult // max(1, hi - lo)
+                for b in range(bits):
+                    z += ((scaled >> b) & 1) << (len(cols) * b + i)
+            out.append((uri, int(z.min()), int(z.max())))
+        return out
+    except Exception:  # noqa: BLE001 — the Spark scan is the fallback
+        return None
+
+
 def _zranges_scan(spark: SparkSession, path: str, only_files=None) -> list:
     """Exact [(file_uri, z_lo, z_hi)] by recomputing every row's
     Z-value with the FROZEN meta over the whole dataset (or over
-    `only_files` — the increment-sized maintenance case)."""
+    `only_files` — the increment-sized maintenance case). A bounded
+    file set on a minmax curve is computed on the driver
+    (``_zranges_pa``, no Spark job); otherwise one Spark scan."""
+    from engage_spark.versioning import _logged_reader
+
     m = zorder_meta(spark, path)
+    got = _zranges_pa(
+        sorted(only_files) if only_files else sorted(_input_files(spark, path)),
+        m,
+    )
+    if got is not None:
+        return got
+    # a leaf-file read without basePath discovers no partition
+    # columns, so the logged schema must not name them either
     src = (
-        spark.read.parquet(*sorted(only_files))
+        _logged_reader(spark, path, drop=tuple(m["part_cols"]))
+        .parquet(*sorted(only_files))
         if only_files
-        else spark.read.parquet(path)
+        else _logged_reader(spark, path).parquet(path)
     )
     z = _zorder_scale_frozen(
         spark, src.withColumn("__file", F.input_file_name()), path, m
@@ -1986,6 +2075,16 @@ def _zranges_read(spark: SparkSession, path: str):
     ]
 
 
+def _input_files(spark: SparkSession, path: str) -> set:
+    """The dataset's data-file URIs as ``spark.read.parquet(path)``
+    lists them (``inputFiles``) — the form the z-range manifest
+    stores. Planned with the log's schema (``_logged_reader``), so the
+    listing launches no schema-inference job."""
+    from engage_spark.versioning import _logged_reader
+
+    return set(_logged_reader(spark, path).parquet(path).inputFiles())
+
+
 def _zranges_drop(spark: SparkSession, path: str) -> None:
     fs, p = _hadoop_fs(spark, f"{path}/{_ZRANGES}")
     if fs.exists(p):
@@ -2003,7 +2102,7 @@ def _zranges_refresh(
     manifest's exact-match validity check and force the next consumer
     into a full-dataset rescan (review-found) — then every other live
     file gets one exact increment-sized scan."""
-    current = set(spark.read.parquet(path).inputFiles())
+    current = _input_files(spark, path)
     kept = [e for e in kept_entries if e[0] in current]
     fresh = current - {f for f, _, _ in kept}
     _zranges_write(
@@ -2026,7 +2125,7 @@ def _zorder_file_ranges(spark: SparkSession, path: str) -> list:
 
     if not _live_names(spark, path):
         return []
-    current = set(spark.read.parquet(path).inputFiles())
+    current = _input_files(spark, path)
     man = _zranges_read(spark, path)
     if man is not None and {f for f, _, _ in man} == current:
         return man
@@ -2326,7 +2425,7 @@ def _optimize_incremental_impl(
     # for datasets that had it; zorder_layout_stats remains the
     # fill-on-read entry point for opting a dataset in.
     man = _zranges_read(spark, path)
-    current = set(spark.read.parquet(path).inputFiles())
+    current = _input_files(spark, path)
     man_live = man is not None and {f for f, _, _ in man} == current
     fr = man if man_live else _zranges_scan(spark, path)
     victims = _optimize_victims(fr)
@@ -2339,11 +2438,11 @@ def _optimize_incremental_impl(
     total = _victim_bytes(spark, path, victims)
     n_new = max(1, math.ceil(total / target_file_bytes))
     staging = f"{path}/{_OPT_STAGING}"
-    victim_src = (
-        spark.read.option("basePath", path)
-        .option("mergeSchema", "true")
-        .parquet(*sorted(victims))
-    )
+    from engage_spark.versioning import _logged_reader
+
+    victim_src = _logged_reader(
+        spark, path, base_path=path, merge=True
+    ).parquet(*sorted(victims))
     out = _zorder_scale_frozen(spark, victim_src, path, m)
     _write_z_layout(out, n_new, part_cols, "overwrite", staging)
     # manifest AFTER staging completes: its presence is the commit point
@@ -2440,7 +2539,7 @@ def _optimize_stage(
     import uuid as _uuid
 
     man = _zranges_read(spark, path)
-    current = set(spark.read.parquet(path).inputFiles())
+    current = _input_files(spark, path)
     man_live = man is not None and {f for f, _, _ in man} == current
     fr = man if man_live else _zranges_scan(spark, path)
     victims = _optimize_victims(fr)
@@ -2453,11 +2552,11 @@ def _optimize_stage(
     staging = (
         f"{path.rstrip('/')}{_OPTIMIZE_STAGING_INFIX}{_uuid.uuid4().hex[:12]}"
     )
-    victim_src = (
-        spark.read.option("basePath", path)
-        .option("mergeSchema", "true")
-        .parquet(*sorted(victims))
-    )
+    from engage_spark.versioning import _logged_reader
+
+    victim_src = _logged_reader(
+        spark, path, base_path=path, merge=True
+    ).parquet(*sorted(victims))
     out = _zorder_scale_frozen(spark, victim_src, path, m)
     _write_z_layout(out, n_new, part_cols, "overwrite", staging)
     from engage_spark.versioning import _relativize
@@ -2603,11 +2702,18 @@ def _swap_dirs(spark: SparkSession, staging: str, target: str) -> None:
 def _swap_recover(spark: SparkSession, target: str) -> bool:
     """Roll a crashed `_swap_dirs` forward: if the swap marker exists,
     the staged merged copy (if still present) replaces the target and
-    the marker clears. Idempotent in every crash window — marker
-    written / target deleted / staging renamed / marker not yet
-    removed. Returns True iff a pending swap was found. Called by the
-    upsert entry before reading or bootstrapping the target (a torn
-    swap leaves the target missing, which would otherwise silently
+    the marker clears; then any sidecar dirs `_stash_sidecars` moved
+    out beside the target move back in (`_unstash_sidecars`), so a
+    crash between the swap and `_restore_sidecars` cannot leave
+    `_versions`, `_deletes` and `_zorder_meta` outside the dataset —
+    de-versioning it and bringing deleted rows back. A marker whose
+    payload cannot be parsed is logged and renamed aside (kept for
+    inspection), never silently deleted. Idempotent in every
+    crash window — marker written / target deleted / staging renamed /
+    marker removed / sidecars partly restored. Returns True iff a
+    pending swap or a stashed sidecar was found. Called by the upsert
+    entry before reading or bootstrapping the target (a torn swap
+    leaves the target missing, which would otherwise silently
     re-bootstrap from one batch)."""
     import json as _json
 
@@ -2616,18 +2722,27 @@ def _swap_recover(spark: SparkSession, target: str) -> bool:
     store = get_commit_store()
     marker = f"{target}{_SWAP_MARKER_SUFFIX}"
     raw = store.read(spark, marker)
-    if raw is None:
-        return False
-    try:
-        staging = _json.loads((raw or b"").decode() or "{}").get("staging")
-    except Exception:
-        staging = None
-    if staging:
-        sfs, sp = _hadoop_fs(spark, staging)
-        if sfs.exists(sp):
-            store.replace_dir(spark, staging, target)
-    store.delete(spark, marker)
-    return True
+    if raw is not None:
+        try:
+            staging = _json.loads(raw.decode())["staging"]
+            if not isinstance(staging, str) or not staging:
+                raise ValueError(f"no staging path in {raw[:200]!r}")
+        except Exception as e:  # noqa: BLE001 — any unparseable payload
+            import time as _time
+
+            aside = f"{marker}.malformed-{int(_time.time() * 1000)}"
+            _log.warning(
+                "swap marker %s is malformed (%s); renamed aside to %s "
+                "without replacing %s", marker, e, aside, target,
+            )
+            if store.put_if_absent(spark, aside, raw):
+                store.delete(spark, marker)
+        else:
+            sfs, sp = _hadoop_fs(spark, staging)
+            if sfs.exists(sp):
+                store.replace_dir(spark, staging, target)
+            store.delete(spark, marker)
+    return _unstash_sidecars(spark, target) or raw is not None
 
 
 def _optimize_commit(
@@ -3111,22 +3226,26 @@ def delete_rows(
     target, sidecar AND log commit inside one leased window (queued on
     `lease_wait_s` — a takedown-sized tail), so a lease timeout can no
     longer leave the live read hiding rows the log never recorded.
-    Returns the number of keys appended."""
+    Cost: a list of ids is deduped on the driver and written with
+    pyarrow (the retained batch and the sidecar part) — no Spark job;
+    the measured Spark write of a 50-key batch took ~0.3 s, and stays
+    the fallback. A DataFrame batch is evaluated once by a Spark
+    write. Returns the number of keys appended."""
     from pyspark.sql import Observation
 
     from engage_spark.session import local_frame
-
-    if isinstance(ids, DataFrame):
-        kdf = ids.select(F.col(ids.columns[0]).alias(key_col)).dropDuplicates()
-    else:
-        kdf = local_frame(
-            spark, [(i,) for i in ids], f"{key_col} long"
-        ).dropDuplicates()
     from engage_spark.versioning import (
+        _pa_append_small,
         record_logical_delete,
         version_log_enabled,
     )
 
+    if isinstance(ids, DataFrame):
+        kdf = ids.select(F.col(ids.columns[0]).alias(key_col)).dropDuplicates()
+    else:
+        # a list batch stays on the driver: deduped here and written
+        # with pyarrow (no Spark job; the Spark write is the fallback)
+        kdf = list(dict.fromkeys(ids))
     if version_log_enabled(spark, path):
         # the count rides the retained-batch write inside
         # record_logical_delete via an Observation, and the sidecar
@@ -3138,6 +3257,13 @@ def delete_rows(
             lease_wait_s=lease_wait_s, write_sidecar=True,
         )
         return n
+    if not isinstance(kdf, DataFrame):
+        ddl = f"{key_col} long"
+        if _pa_append_small(
+            spark, f"{path}/{_DELETES}", [{key_col: k} for k in kdf], ddl
+        ):
+            return len(kdf)
+        kdf = local_frame(spark, [(k,) for k in kdf], ddl)
     # count rides the write via an Observation — one evaluation of the
     # batch, not a write plus a second count() run of the same plan
     obs = Observation()
@@ -3148,35 +3274,103 @@ def delete_rows(
 
 
 def read_with_deletes(spark: SparkSession, path: str) -> DataFrame:
-    """Scan a dataset honoring its deletion sidecar: a BROADCAST
-    left-anti join against the (takedown-batch-sized) `_deletes` keys
-    — the zero-rewrite read path. Without a sidecar this is a plain
-    scan with no plan change. The sidecar may hold batches on SEVERAL
-    key columns (a corpus taking down by both doc_id and user_id, or
-    a multi-key restore_version re-record): each batch part is a
-    single-column file, the mergeSchema read unions them, and one
-    anti-join per key column applies them all. NULL keys in a batch
-    are no-ops either way (a plain anti-join never matches NULL)."""
-    df = spark.read.parquet(path)
+    """Scan a dataset honoring its deletion sidecar — the zero-rewrite
+    read path. Without a sidecar this is a plain scan with no plan
+    change. The sidecar may hold batches on SEVERAL key columns (a
+    corpus taking down by both doc_id and user_id, or a multi-key
+    restore_version re-record): each batch part is a single-column
+    file, and every key column's batch applies. A version-logged
+    dataset is scanned with the log's schema, and a small sidecar
+    (the common takedown shape) is read driver-side and applied as a
+    literal NOT IN filter, so the read plans with no Spark job;
+    otherwise the keys broadcast-anti-join the scan
+    (``_drop_deleted_keys``). Rows whose key is NULL stay either way,
+    and NULL keys in a batch are no-ops (an anti-join never matches
+    NULL)."""
+    from engage_spark.versioning import _logged_reader
+
+    df = _logged_reader(spark, path).parquet(path)
     if not _deletes_has_parts(spark, path):
         return df
-    dels = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(f"{path}/{_DELETES}")
-    )
-    for key in dels.columns:
-        keys = (
-            dels.select(key).filter(F.col(key).isNotNull()).dropDuplicates()
-        )
-        df = df.join(F.broadcast(keys), on=key, how="left_anti")
-    return df
+    return _drop_deleted_keys(spark, df, [f"{path}/{_DELETES}"])
 
 
-# apply_deletes collects the delete batch to build an In-literal
-# filter (parquet footer pruning finds victims without reading clean
-# files) up to this many keys; larger batches fall back to one
-# key-column scan with a broadcast semi-join.
+# Delete-key batches up to this many distinct keys per column are
+# applied as In-literal predicates: read_with_deletes and time travel
+# filter with NOT IN, and apply_deletes finds victims with IN (parquet
+# footer pruning skips clean files without reading them). Larger
+# batches fall back to a broadcast anti-/semi-join over a Spark read.
 _DELETES_ISIN_MAX = 100_000
+
+
+def _keys_in(col: str, keys, negate: bool = False):
+    """``col IN (k1, ...)`` — or, with `negate`, ``col IS NULL OR col
+    NOT IN (...)``, which keeps NULL keys as a left-anti join does —
+    for integer or string keys, built as ONE parsed SQL expression
+    (Column.isin costs two py4j calls per key). Strings are written as
+    UTF-8 hex binary literals cast back to string, so no value can
+    break the quoting; the optimizer folds them into plain literals,
+    which push into the parquet scan."""
+
+    def lit(k) -> str:
+        if isinstance(k, str):
+            return f"CAST(X'{k.encode('utf-8').hex()}' AS STRING)"
+        return str(k)
+
+    q = "`" + col.replace("`", "``") + "`"
+    sql = f"{q} IN ({', '.join(lit(k) for k in sorted(keys))})"
+    return F.expr(f"{q} IS NULL OR NOT ({sql})" if negate else sql)
+
+
+def _delete_keys_pa(spark: SparkSession, dirs: list) -> dict | None:
+    """{key column: set of its non-NULL keys} across the delete-key
+    batch dirs `dirs`, read driver-side with ``_pa_read_small``. None —
+    the caller then reads with Spark — when a dir cannot be read that
+    way or holds no rows (a missing batch must fail loud there), when
+    a column holds anything but integers or strings, or when a column
+    holds more than ``_DELETES_ISIN_MAX`` keys."""
+    from engage_spark.versioning import _pa_read_small
+
+    out: dict = {}
+    kinds: dict = {}
+    for d in dirs:
+        rows = _pa_read_small(spark, d)
+        if not rows:
+            return None
+        for r in rows:
+            for c, k in r.items():
+                keys = out.setdefault(c, set())
+                if k is None:
+                    continue
+                kind = type(k)
+                if kind not in (int, str) or kinds.setdefault(c, kind) is not kind:
+                    return None
+                keys.add(k)
+    if any(len(ks) > _DELETES_ISIN_MAX for ks in out.values()):
+        return None
+    return out
+
+
+def _drop_deleted_keys(spark: SparkSession, df: DataFrame, dirs: list):
+    """`df` without the rows whose key is in the delete-key batches
+    under `dirs` (the `_deletes` sidecar, or a version's pending
+    deletes_vN batches). A small batch (``_delete_keys_pa``) becomes a
+    literal ``key IS NULL OR key NOT IN (...)`` filter — no Spark job
+    to read or broadcast the keys, and the filter pushes into the
+    scan; anything else anti-joins a broadcast Spark read of the
+    batches, one join per key column. Either way a row whose key is
+    NULL stays, exactly as under a left-anti join."""
+    keys = _delete_keys_pa(spark, dirs)
+    if keys is not None:
+        for c, ks in keys.items():
+            if ks:
+                df = df.filter(_keys_in(c, ks, negate=True))
+        return df
+    dels = spark.read.option("mergeSchema", "true").parquet(*dirs)
+    for key in dels.columns:
+        ks = dels.select(key).filter(F.col(key).isNotNull()).dropDuplicates()
+        df = df.join(F.broadcast(ks), on=key, how="left_anti")
+    return df
 
 
 def apply_deletes(
@@ -3325,27 +3519,42 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
     footer min/max pruning skip clean files; a per-file bloom index on
     the key column (r14) prunes the candidate FILE LIST driver-side
     before any scan is planned; larger batches broadcast-semi-join one
-    column-pruned scan. Victim count is bounded by the file count."""
-    from engage_spark.versioning import version_log_enabled
-
-    dels_all = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(f"{path}/{_DELETES}")
+    column-pruned scan. Victim count is bounded by the file count.
+    The sidecar is read driver-side when it is small
+    (``_delete_keys_pa``): ``per_key`` then maps each column to its
+    sorted key list instead of a DataFrame, and neither the counts nor
+    the In-literal need a Spark job. The dataset is scanned with the
+    log's schema."""
+    from engage_spark.versioning import (
+        _logged_reader,
+        _stable_schema,
+        version_log_enabled,
     )
+
     sfs, sp = _hadoop_fs(spark, f"{path}/{_DELETES}")
     sidecar_parts = sorted(
         st.getPath().getName()
         for st in sfs.listStatus(sp)
         if not st.getPath().getName().startswith(("_", "."))
     )
-    per_key = {
-        c: dels_all.select(c).filter(F.col(c).isNotNull()).dropDuplicates()
-        for c in dels_all.columns
-    }
-    counts = {c: kdf.count() for c, kdf in per_key.items()}
+    small = _delete_keys_pa(spark, [f"{path}/{_DELETES}"])
+    if small is not None:
+        per_key = {c: sorted(ks) for c, ks in small.items()}
+        counts = {c: len(ks) for c, ks in per_key.items()}
+    else:
+        dels_all = (
+            spark.read.option("mergeSchema", "true")
+            .parquet(f"{path}/{_DELETES}")
+        )
+        per_key = {
+            c: dels_all.select(c).filter(F.col(c).isNotNull()).dropDuplicates()
+            for c in dels_all.columns
+        }
+        counts = {c: kdf.count() for c, kdf in per_key.items()}
     n = sum(counts.values())  # bounded: takedowns since the last vacuum
     key_cols = list(per_key)
-    tagged = spark.read.parquet(path).select(
+    data = _logged_reader(spark, path).parquet(path)
+    tagged = data.select(
         F.input_file_name().alias("__file"), *[F.col(c) for c in key_cols]
     )
     bloom_cols: set = set()
@@ -3373,7 +3582,11 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
         if counts[c] <= _DELETES_ISIN_MAX:
             # literal In pushes to the parquet scan: row-group stats
             # skip files whose key range misses the batch entirely
-            keys = [r[0] for r in kdf.collect()]
+            keys = kdf if isinstance(kdf, list) else [
+                r[0] for r in kdf.collect()
+            ]
+            if not keys:
+                continue  # only NULL keys: they match no row
             src = tagged
             if c in bloom_cols:
                 from engage_spark.indexes import _bloom_prune
@@ -3385,10 +3598,14 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
                 if not cand:
                     continue  # no live file can contain these keys
                 if n_pruned:
-                    src = _read_names(spark, path, cand).select(
-                        F.input_file_name().alias("__file"), F.col(c)
-                    )
-            hits = src.filter(F.col(c).isin(keys))
+                    src = _read_names(
+                        spark, path, cand,
+                        schema=_stable_schema(spark, path),
+                    ).select(F.input_file_name().alias("__file"), F.col(c))
+            if all(type(k) in (int, str) for k in keys):
+                hits = src.filter(_keys_in(c, keys))
+            else:
+                hits = src.filter(F.col(c).isin(keys))
         else:
             hits = tagged.join(F.broadcast(kdf), on=c, how="left_semi")
         victim_set |= {
@@ -3399,7 +3616,7 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
         "n": n,
         "key_cols": key_cols,
         "victims": sorted(victim_set),
-        "all_files": set(spark.read.parquet(path).inputFiles()),
+        "all_files": set(data.inputFiles()),
         "sidecar_parts": sidecar_parts,
     }
 
@@ -3430,13 +3647,18 @@ def _applydv_write_survivors(
         for seg in victim_rel[0].split("/")[:-1]
         if "=" in seg
     ]
-    kept_rows = (
-        spark.read.option("basePath", path)
-        .option("mergeSchema", "true")
-        .parquet(*victims)
-    )
+    from engage_spark.versioning import _logged_reader
+
+    kept_rows = _logged_reader(
+        spark, path, base_path=path, merge=True
+    ).parquet(*victims)
     for c, kdf in per_key.items():
-        kept_rows = kept_rows.join(F.broadcast(kdf), on=c, how="left_anti")
+        if not isinstance(kdf, list):
+            kept_rows = kept_rows.join(
+                F.broadcast(kdf), on=c, how="left_anti"
+            )
+        elif kdf:
+            kept_rows = kept_rows.filter(_keys_in(c, kdf, negate=True))
     zm_fs, zm_p = _hadoop_fs(spark, f"{path}/_zorder_meta/info")
     if part_cols and zm_fs.exists(zm_p):
         # partitioned AND clustered (r13): survivors go back on the
@@ -3740,6 +3962,36 @@ def _restore_sidecars(spark: SparkSession, stashed: list) -> None:
         _zmeta_invalidate(final.rsplit("/", 1)[0])
 
 
+def _unstash_sidecars(spark: SparkSession, target: str) -> bool:
+    """Crash recovery for `_stash_sidecars`: move every
+    ``{target}__sidecar_{name}`` dir left beside an existing target
+    back to ``{target}/_{name}``. A stash whose live dir exists again
+    is left in place and logged — which copy is current cannot be
+    told from here. Caller holds the maintenance lease (no stash is in
+    flight). Returns True iff a stash was found."""
+    fs, p = _hadoop_fs(spark, target)
+    found = fs.globStatus(
+        spark._jvm.org.apache.hadoop.fs.Path(f"{p.toString()}__sidecar_*")
+    )
+    if not found:
+        return False
+    if not fs.exists(p):
+        return True  # nothing to restore into yet
+    restore = []
+    for st in found:
+        stem = st.getPath().getName().split("__sidecar_", 1)[1]
+        final = f"{target}/_{stem}"
+        if fs.exists(_hadoop_fs(spark, final)[1]):
+            _log.warning(
+                "stashed sidecar %s left in place: %s exists",
+                st.getPath().toString(), final,
+            )
+            continue
+        restore.append((f"{target}__sidecar_{stem}", final))
+    _restore_sidecars(spark, restore)
+    return True
+
+
 def upsert_dataset(
     spark: SparkSession,
     target: str,
@@ -3829,6 +4081,11 @@ def upsert_dataset(
         not s.getPath().getName().startswith("_") for s in fs.listStatus(p)
     )
     vlog = exists and version_log_enabled(spark, target)
+    if exists:
+        updates = _gate_write_schema(
+            spark, target, updates,
+            skip=list(partition_by or []) + [delete_col],
+        )
     gate_report: dict = {}
     gate_staging = None
     if expectations is not None:
@@ -4106,6 +4363,77 @@ def _evolution_marker_write(spark: SparkSession, target: str, cols) -> None:
     out.close()
 
 
+def _exact_cast(src: T.DataType, dst: T.DataType) -> bool:
+    """True iff every `src` value converts to `dst` exactly and back:
+    integral widening, float or a <=32-bit integer to double, and a
+    decimal widening that loses neither integer nor fraction digits."""
+    rank = {T.ByteType: 0, T.ShortType: 1, T.IntegerType: 2, T.LongType: 3}
+    if type(src) in rank and type(dst) in rank:
+        return rank[type(src)] <= rank[type(dst)]
+    if isinstance(dst, T.DoubleType):
+        return type(src) in (T.ByteType, T.ShortType, T.IntegerType, T.FloatType)
+    if isinstance(src, T.DecimalType) and isinstance(dst, T.DecimalType):
+        return (
+            dst.scale >= src.scale
+            and dst.precision - dst.scale >= src.precision - src.scale
+        )
+    return False
+
+
+def _gate_write_schema(
+    spark: SparkSession, path: str, df: DataFrame, skip=()
+) -> DataFrame:
+    """The write-schema gate shared by append_dataset, zorder_append
+    and upsert_dataset: every column the batch shares with the
+    existing dataset must carry the dataset's type, nullability and
+    field metadata aside. A column whose type differs is cast when the
+    cast is exact (``_exact_cast``) and refused otherwise: a TIMESTAMP
+    batch committed into a TIMESTAMP_NTZ table would make every read
+    spanning both file sets fail to merge the schemas. New columns are not this gate's business (upsert's
+    ``_check_merge_schema`` governs them); `skip` names the partition
+    columns, whose type comes from the directory names. The dataset's
+    type comes from the version log, else from one inference over its
+    files; with neither (no data yet) the batch passes unchanged."""
+    from engage_spark.versioning import _schema_at, _vlog_entries
+
+    entries = _vlog_entries(spark, path)  # [] without a log
+    want = _schema_at(entries, entries[-1]["version"]) if entries else None
+    if want is None:
+        try:
+            want = spark.read.parquet(path).schema
+        except Exception:  # noqa: BLE001 — empty/absent: nothing to gate
+            return df
+    have = {f.name: f.dataType for f in df.schema.fields}
+    casts, bad = {}, []
+    for f in want.fields:
+        src = have.get(f.name)
+        if f.name in skip or src is None:
+            continue
+        if src.simpleString() == f.dataType.simpleString():
+            continue
+        if _exact_cast(src, f.dataType):
+            casts[f.name] = f.dataType
+        else:
+            bad.append(
+                f"{f.name}: {src.simpleString()} into "
+                f"{f.dataType.simpleString()}"
+            )
+    if bad:
+        raise ValueError(
+            f"batch types do not match {path}: {'; '.join(bad)} — cast "
+            "the batch explicitly; only exact widenings are applied "
+            "automatically"
+        )
+    if not casts:
+        return df
+    return df.select(
+        *[
+            df[c].cast(casts[c]).alias(c) if c in casts else df[c]
+            for c in df.columns
+        ]
+    )
+
+
 def _check_merge_schema(
     spark: SparkSession,
     target: str,
@@ -4196,11 +4524,11 @@ def _upsert_stage_partitioned(
     # unevolved corpora) — footer sampling on a mixed-schema target
     # would otherwise nondeterministically drop the evolved column
     # from rewritten partitions (review-found)
-    tgt = (
-        spark.read.option("mergeSchema", "true").parquet(target)
-        if _evolution_marker_exists(spark, target)
-        else spark.read.parquet(target)
-    )
+    from engage_spark.versioning import _logged_reader
+
+    tgt = _logged_reader(
+        spark, target, merge=_evolution_marker_exists(spark, target)
+    ).parquet(target)
     new_cols = _check_merge_schema(
         spark, target,
         tgt.columns,
@@ -4548,11 +4876,11 @@ def _upsert_dataset_impl(
     # unevolved corpora) — footer sampling on a mixed-schema target
     # would otherwise nondeterministically drop the evolved column
     # from rewritten partitions (review-found)
-    tgt = (
-        spark.read.option("mergeSchema", "true").parquet(target)
-        if _evolution_marker_exists(spark, target)
-        else spark.read.parquet(target)
-    )
+    from engage_spark.versioning import _logged_reader
+
+    tgt = _logged_reader(
+        spark, target, merge=_evolution_marker_exists(spark, target)
+    ).parquet(target)
     new_cols = _check_merge_schema(
         spark, target,
         tgt.columns,

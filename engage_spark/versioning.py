@@ -566,17 +566,34 @@ def _pa_overwrite_small(
         return False
 
 
+def _vlog_part_memo(spark: SparkSession) -> dict:
+    """The session's log-part memo: log dir -> {(part path, size,
+    mtime_ns): rows}. Log parts are immutable and uuid-named (every
+    writer stages a new part and renames it in; compaction writes a new
+    part and deletes the old ones), so a part's rows never change under
+    its name — the size/mtime pair in the key guards against an
+    out-of-band rewrite in place. Each read keeps only the parts it
+    listed, so the memo is bounded by the live log; it lives on the
+    session object, like io._hadoop_fs's cache, and dies with it."""
+    return spark.__dict__.setdefault("_engage_vlog_parts", {})
+
+
 def _vlog_rows_pa(spark: SparkSession, path: str) -> list | None:
     """The log's raw rows read DRIVER-SIDE via pyarrow — ~10 ms where
     the Spark-job read costs ~240 ms of scheduling per call (r15:
     _vlog_entries is the fixed term left in every log-owned read's
-    plan, paid 1-2x per read). Per-part reads tolerate schema drift
-    across log generations (ts_unix r13, schema_json/added_bytes r15)
-    the same way mergeSchema did — missing columns simply absent from
-    that part's dicts, handled by the caller's d.get(). Returns None
-    on ANY failure (exotic scheme pyarrow can't reach, torn part,
-    missing wheel) — the Spark read remains the fallback, never a
-    different answer."""
+    plan, paid 1-2x per read). Parts are memoized per session
+    (``_vlog_part_memo``), so a warm read costs ONE listing plus a read
+    of each part committed since the last call — a storage op reads the
+    log several times, and re-reading every part each time was ~1 s per
+    maintenance cycle of the benchmark's orders table. Per-part reads
+    tolerate schema drift across log generations (ts_unix r13,
+    schema_json/added_bytes r15) the same way mergeSchema did — missing
+    columns simply absent from that part's dicts, handled by the
+    caller's d.get(). The rows are shared with the memo: callers copy,
+    never mutate. Returns None on ANY failure (exotic scheme pyarrow
+    can't reach, torn part, missing wheel) — the Spark read remains the
+    fallback, never a different answer."""
     try:
         import pyarrow.parquet as pq
 
@@ -586,14 +603,20 @@ def _vlog_rows_pa(spark: SparkSession, path: str) -> list | None:
         from pyarrow.fs import FileSelector
 
         infos = pafs.get_file_info(FileSelector(pp, recursive=False))
+        memo = _vlog_part_memo(spark).get(uri, {})
+        fresh: dict = {}
         rows: list = []
-        for fi in infos:
+        for fi in sorted(infos, key=lambda i: i.path):
             name = fi.base_name
             if fi.type.name != "File" or name.startswith(("_", ".")):
                 continue
-            rows.extend(
-                pq.read_table(fi.path, filesystem=pafs).to_pylist()
-            )
+            key = (fi.path, fi.size, fi.mtime_ns)
+            part = memo.get(key)
+            if part is None:
+                part = pq.read_table(fi.path, filesystem=pafs).to_pylist()
+            fresh[key] = part
+            rows.extend(part)
+        _vlog_part_memo(spark)[uri] = fresh
         return rows
     except Exception:  # noqa: BLE001 — fallback, never a wrong answer
         return None
@@ -852,7 +875,9 @@ def _merge_structs(prev, inc):
 
 
 _PART_INT_RE = _re.compile(r"[+-]?\d+\Z")
-_PART_DBL_RE = _re.compile(r"[+-]?(\d+\.\d*|\.\d+)\Z")
+# a fraction digit is required: "1." is a DECIMAL under Spark's
+# inference (BigDecimal scale 0), not a double — refused below
+_PART_DBL_RE = _re.compile(r"[+-]?\d*\.\d+\Z")
 _PART_DATE_RE = _re.compile(r"\d{4}-\d{2}-\d{2}\Z")
 
 
@@ -957,16 +982,86 @@ def _arrow_type_unambiguous(t) -> bool:
     )
 
 
-def _schema_from_footer_and_dirs(pa_schema, added: list):
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_timestamp_types(footer, infer_ntz: bool = True) -> dict:
+    """{top-level column: Spark type} for the timestamp columns of a
+    parquet footer (pyarrow ``FileMetaData``), typed the way Spark's
+    reader types them — the arrow type alone cannot tell them apart
+    (INT96 reads back as tz-less ns). A Spark-written footer carries
+    Spark's own schema in its key-value metadata, and Spark takes the
+    type from there. Otherwise the PHYSICAL and LOGICAL type decide:
+    INT96, or INT64 TIMESTAMP(MILLIS|MICROS) with isAdjustedToUTC=true,
+    is TIMESTAMP; isAdjustedToUTC=false is TIMESTAMP_NTZ when
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` (``infer_ntz``),
+    else TIMESTAMP. NANOS and nested timestamps are left out, so the
+    caller refuses them."""
+    import json as _json
+
+    from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
+
+    written: dict = {}
+    raw = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is not None:
+        written = {
+            f.name: f.dataType
+            for f in StructType.fromJson(_json.loads(raw)).fields
+            if isinstance(f.dataType, (TimestampType, TimestampNTZType))
+        }
+    out: dict = {}
+    seen: set = set()
+    for col in footer.schema:
+        name = col.path
+        if name in seen:  # ambiguous dotted path: refuse it
+            out.pop(name, None)
+            continue
+        seen.add(name)
+        if name in written:
+            out[name] = written[name]
+        elif col.physical_type == "INT96":
+            out[name] = TimestampType()
+        elif col.physical_type == "INT64" and col.logical_type.type == "TIMESTAMP":
+            lt = _json.loads(col.logical_type.to_json())
+            if lt.get("timeUnit") not in ("milliseconds", "microseconds"):
+                continue
+            utc = bool(lt.get("isAdjustedToUTC"))
+            out[name] = (
+                TimestampNTZType() if infer_ntz and not utc else TimestampType()
+            )
+    return out
+
+
+def _schema_from_footer_and_dirs(
+    pa_schema, added: list, footer=None, infer_ntz: bool = True
+):
     """Driver-side increment schema: the (single, identical) added
     footer converted via Spark's arrow converter, plus partition
-    columns parsed from the added paths' hive layout. None whenever
-    ANY piece is outside the proven-parity subset — the caller then
-    runs the spark.read inference this fast path replaces."""
+    columns parsed from the added paths' hive layout. Top-level
+    timestamp columns are typed from the parquet ``footer``
+    (``_footer_timestamp_types``); without it they are refused. None
+    whenever ANY piece is outside the proven-parity subset — the
+    caller then runs the spark.read inference this fast path
+    replaces."""
     try:
-        if any(not _arrow_type_unambiguous(f.type) for f in pa_schema):
+        import pyarrow as pa
+
+        ts = (
+            _footer_timestamp_types(footer, infer_ntz)
+            if footer is not None
+            else {}
+        )
+        ts = {
+            f.name: ts[f.name]
+            for f in pa_schema
+            if f.name in ts and pa.types.is_timestamp(f.type)
+        }
+        if any(
+            f.name not in ts and not _arrow_type_unambiguous(f.type)
+            for f in pa_schema
+        ):
             return None
-        from pyspark.sql.pandas.types import from_arrow_schema
+        from pyspark.sql.pandas.types import from_arrow_type
         from pyspark.sql.types import (
             ArrayType,
             MapType,
@@ -1001,10 +1096,21 @@ def _schema_from_footer_and_dirs(pa_schema, added: list):
                 )
             return dt
 
-        data = _as_nullable(from_arrow_schema(pa_schema))
+        data = _as_nullable(
+            StructType(
+                [
+                    StructField(
+                        f.name, ts.get(f.name) or from_arrow_type(f.type), True
+                    )
+                    for f in pa_schema
+                ]
+            )
+        )
         # partition columns: every added path must carry the same
         # col= sequence; values accumulate per column
-        part_cols: list[str] = []
+        # None until the first path: a root-level file ([]) followed by
+        # a partitioned one must read as MIXED, not as "unset"
+        part_cols: list[str] | None = None
         part_vals: dict[str, set] = {}
         for rel in added:
             segs = rel.split("/")[:-1]
@@ -1015,13 +1121,13 @@ def _schema_from_footer_and_dirs(pa_schema, added: list):
                 c, _, val = seg.partition("=")
                 cols.append(c)
                 part_vals.setdefault(c, set()).add(val)
-            if not part_cols:
+            if part_cols is None:
                 part_cols = cols
             elif cols != part_cols:
                 return None  # mixed layouts — let Spark sort it out
         fields = list(data.fields)
         taken = {f.name for f in fields}
-        for c in part_cols:
+        for c in part_cols or []:
             if c in taken:
                 return None  # partition col shadowing a data col
             t = _infer_part_type(part_vals[c])
@@ -1043,11 +1149,17 @@ def _commit_schema_json(
 ) -> str | None:
     """The merged dataset schema as of the entry being written —
     previous entry's logged schema ∪ the added files' footers
-    (increment-sized). A log whose tip carries no schema (pre-r15, or
-    poisoned by a type conflict) recomputes the FULL merge once from
-    this version's complete file list, upgrading the log in place.
-    Never fails the commit: any error degrades to None (readers fall
-    back to mergeSchema)."""
+    (increment-sized). Cost: when the added footers are identical
+    (one commit = one write) the increment schema is built on the
+    driver from one footer read with pyarrow, timestamps included
+    (``_footer_timestamp_types``) — no Spark job; a Spark
+    schema-inference job (~80 ms) remains only for heterogeneous
+    increments and types outside the proven-parity subset. A log
+    whose tip carries no schema (pre-r15, or poisoned by a type
+    conflict) recomputes the FULL merge once from this version's
+    complete file list, upgrading the log in place. Never fails the
+    commit: any error degrades to None (readers fall back to
+    mergeSchema)."""
     import json as _json
 
     from pyspark.sql.types import StructType
@@ -1068,7 +1180,7 @@ def _commit_schema_json(
         # work belongs on the driver, not in a scheduled job.)
         paths = [f"{path}/{n}" for n in sorted(added)]
         merge = "true"
-        pa_schema = None
+        pa_schema = footer = None
         if len(paths) <= 256:
             try:
                 import pyarrow.parquet as pq
@@ -1076,8 +1188,21 @@ def _commit_schema_json(
                 pafs, pp = _pa_dir_for(spark, path)
                 footers: set = set()
                 for n in sorted(added):
-                    pa_schema = pq.read_schema(f"{pp}/{n}", filesystem=pafs)
-                    footers.add(str(pa_schema))
+                    with pafs.open_input_file(f"{pp}/{n}") as fh:
+                        footer = pq.read_metadata(fh)
+                    pa_schema = footer.schema.to_arrow_schema()
+                    # physical types and Spark's own schema too: INT96
+                    # and INT64 timestamps share one arrow type but not
+                    # one Spark type
+                    footers.add(
+                        (
+                            str(pa_schema),
+                            (footer.metadata or {}).get(_SPARK_ROW_METADATA),
+                        ) + tuple(
+                            (c.path, c.physical_type, c.logical_type.to_json())
+                            for c in footer.schema
+                        )
+                    )
                     if len(footers) > 1:
                         break
                 if len(footers) == 1:
@@ -1099,7 +1224,12 @@ def _commit_schema_json(
         # partitioned MERGE). Parity pinned by
         # test_versioning's inference sweep.
         inc = (
-            _schema_from_footer_and_dirs(pa_schema, sorted(added))
+            _schema_from_footer_and_dirs(
+                pa_schema, sorted(added), footer,
+                infer_ntz=spark.conf.get(
+                    "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+                ).lower() == "true",
+            )
             if pa_schema is not None
             else None
         )
@@ -1242,6 +1372,46 @@ def _schema_at(entries: list, upto: int):
             break
         sj = e["schema_json"]
     return StructType.fromJson(_json.loads(sj)) if sj else None
+
+
+def _stable_schema(spark: SparkSession, path: str):
+    """The logged schema of `path` when EVERY log entry records the
+    same one — the schema never evolved, so Spark's inference over any
+    of the dataset's files (sampled footer or mergeSchema) yields
+    exactly it. None when the dataset has no log, an entry carries no
+    schema (pre-r15 log, or a commit whose schema record failed), or
+    the schema evolved; the caller then infers as before."""
+    entries = _vlog_entries(spark, path)  # [] without a log
+    if not entries or len({e["schema_json"] for e in entries}) != 1:
+        return None
+    return _schema_at(entries, entries[-1]["version"])
+
+
+def _logged_reader(
+    spark: SparkSession,
+    path: str,
+    base_path: str | None = None,
+    merge: bool = False,
+    drop: tuple = (),
+):
+    """A ``spark.read`` for files of the dataset at `path` that takes
+    its schema from the version log (``_stable_schema``) — the plan
+    then needs no schema-inference job (one per read, ~80 ms warm).
+    Without a stable logged schema it infers as before, with
+    mergeSchema when `merge`. `drop` leaves columns out of the logged
+    schema: the partition columns of a leaf-file read without
+    basePath, which Spark would not discover."""
+    r = spark.read
+    if base_path is not None:
+        r = r.option("basePath", base_path)
+    schema = _stable_schema(spark, path)
+    if schema is not None:
+        from pyspark.sql.types import StructType
+
+        return r.schema(
+            StructType([f for f in schema.fields if f.name not in drop])
+        )
+    return r.option("mergeSchema", "true") if merge else r
 
 
 def _replay_files(entries: list, upto: int) -> list:
@@ -1483,7 +1653,7 @@ def version_log_enable(spark: SparkSession, path: str) -> int:
 def record_logical_delete(
     spark: SparkSession,
     path: str,
-    keys: DataFrame,
+    keys,
     key_col: str,
     n_keys: int | None = None,
     lease_wait_s: float = 30.0,
@@ -1507,7 +1677,12 @@ def record_logical_delete(
     one delete op ran it twice; every sidecar consumer anti-joins or
     dropDuplicates, so copied raw rows read identically to the
     deduped Spark append they replace, which stays the fallback).
-    Returns ``(version, n_keys)``."""
+    `keys` may also be a list of distinct INTEGER keys (io.delete_rows'
+    list input): the batch and the sidecar part are then written
+    driver-side with pyarrow (``_pa_overwrite_small`` /
+    ``_pa_append_small``, ``{key_col} long``) — no Spark job in the
+    takedown at all; the Spark write of the same rows stays the
+    fallback. Returns ``(version, n_keys)``."""
     from engage_spark.io import _DELETES, maintenance_lease
 
     from pyspark.sql import Observation
@@ -1518,26 +1693,37 @@ def record_logical_delete(
         _vlog_reconcile(spark, path)
         entries = _vlog_entries(spark, path)
         v = _vlog_allocate_version(spark, path, entries)
-        # when the caller didn't pass a count, ride it on the key-batch
-        # write via an Observation — one evaluation of the input frame,
-        # not a write plus a second count() run of the same plan
-        obs = Observation() if n_keys is None else None
-        kdf = keys.select(F.col(key_col))
-        if obs is not None:
-            kdf = kdf.observe(obs, F.count(F.lit(1)).alias("n"))
-        kdf.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/{_VRETAINED}/deletes_v{v}"
-        )
-        if write_sidecar and not _copy_parts(
-            spark,
-            f"{path}/{_VRETAINED}/deletes_v{v}",
-            f"{path}/{_DELETES}",
-            f"dv{v}",
-        ):
-            keys.select(F.col(key_col)).dropDuplicates().write.mode(
-                "append"
-            ).parquet(f"{path}/{_DELETES}")
-        n = int(obs.get["n"]) if obs is not None else n_keys
+        batch = f"{path}/{_VRETAINED}/deletes_v{v}"
+        if not isinstance(keys, DataFrame):
+            ddl = f"{key_col} long"
+            rows = [{key_col: k} for k in keys]
+            if _pa_overwrite_small(spark, batch, rows, ddl) and (
+                not write_sidecar
+                or _pa_append_small(spark, f"{path}/{_DELETES}", rows, ddl)
+            ):
+                n = len(rows)
+                keys = None
+            else:
+                from engage_spark.session import local_frame
+
+                keys = local_frame(spark, [(r[key_col],) for r in rows], ddl)
+                n_keys = len(rows)
+        if keys is not None:
+            # when the caller didn't pass a count, ride it on the
+            # key-batch write via an Observation — one evaluation of
+            # the input frame, not a write plus a second count() run
+            obs = Observation() if n_keys is None else None
+            kdf = keys.select(F.col(key_col))
+            if obs is not None:
+                kdf = kdf.observe(obs, F.count(F.lit(1)).alias("n"))
+            kdf.coalesce(1).write.mode("overwrite").parquet(batch)
+            if write_sidecar and not _copy_parts(
+                spark, batch, f"{path}/{_DELETES}", f"dv{v}",
+            ):
+                keys.select(F.col(key_col)).dropDuplicates().write.mode(
+                    "append"
+                ).parquet(f"{path}/{_DELETES}")
+            n = int(obs.get["n"]) if obs is not None else n_keys
         _vlog_append_entry(
             spark,
             path,
@@ -1761,22 +1947,19 @@ def read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
 def _apply_pending_dvs(
     spark: SparkSession, path: str, entries: list, version: int, df: DataFrame
 ) -> DataFrame:
-    """Anti-join `version`'s pending deletion-vector batches onto a
-    frame read from that version's files (the shared tail of
-    read_version and the stats-pruned read_where)."""
+    """Hide `version`'s pending deletion-vector batches from a frame
+    read from that version's files (the shared tail of read_version,
+    read_keys and the stats-pruned read_where) — through
+    io._drop_deleted_keys: a literal NOT IN filter for small batches
+    read driver-side, the broadcast anti-join otherwise."""
+    from engage_spark.io import _drop_deleted_keys
+
     pend = _pending_delete_versions(entries, version)
     if not pend:
         return df
-    by_key: dict = {}
-    ent = {e["version"]: e for e in entries}
-    for v in pend:
-        by_key.setdefault(ent[v]["key_col"], []).append(
-            f"{path}/{_VRETAINED}/deletes_v{v}"
-        )
-    for key, dirs in by_key.items():
-        dels = spark.read.parquet(*dirs).dropDuplicates()
-        df = df.join(F.broadcast(dels), on=key, how="left_anti")
-    return df
+    return _drop_deleted_keys(
+        spark, df, [f"{path}/{_VRETAINED}/deletes_v{v}" for v in pend]
+    )
 
 
 def read_snapshot(spark: SparkSession, path: str) -> tuple:

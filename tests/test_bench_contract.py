@@ -41,3 +41,31 @@ def test_emit_result_survives_unwritable_path(capsys):
     assert json.loads(cap.out.strip()) == payload
     assert json.loads(line) == payload
     assert "bench_out write failed" in cap.err
+
+
+def test_run_fields_record_resolved_cpus_and_master():
+    # the bench record names the parallelism and master it ran with,
+    # so results from differently-sized runs cannot be compared
+    # unknowingly; new keys only, beside the existing contract
+    from types import SimpleNamespace
+
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=4, master="local[4]")
+    )
+    assert bench.run_fields(spark) == {"cpus": 4, "master": "local[4]"}
+
+
+def test_run_fields_extend_the_record_without_changing_it(tmp_path, capsys):
+    from types import SimpleNamespace
+
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=8, master="local[*]")
+    )
+    base = {"metric": "headline_total", "value": 1.5, "unit": "sec",
+            "queries": {"q1_pricing_summary": 1.5}, "sf": 0.1}
+    line = bench.emit_result({**base, **bench.run_fields(spark)},
+                             out_path=str(tmp_path / "o.json"))
+    rec = json.loads(line)
+    assert {k: rec[k] for k in base} == base
+    assert (rec["cpus"], rec["master"]) == (8, "local[*]")
+    assert len(capsys.readouterr().out.strip().splitlines()) == 1

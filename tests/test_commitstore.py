@@ -426,3 +426,108 @@ def test_swap_recover_rolls_crashed_swap_forward(spark, tmp_path):
     back2 = {r.k: r.v for r in spark.read.parquet(tgt2).collect()}
     # NOT a one-row bootstrap: the healed swap's row survived the merge
     assert back2 == {7: "old-merged", 8: "new"}
+
+
+class _Crash(BaseException):
+    """A hard kill at a chosen point: not an Exception, so no handler
+    on the way out can treat it as an ordinary failure."""
+
+
+@pytest.mark.parametrize("marker_left", [False, True])
+def test_swap_recover_restores_stashed_sidecars(
+    spark, tmp_path, monkeypatch, marker_left
+):
+    """A crash after the full-rewrite swap's replace_dir, before
+    _restore_sidecars moved the stashed sidecar dirs back, left
+    `_versions`, `_deletes` and `_zorder_meta` beside the dataset for
+    good: the dataset read as unversioned and its deleted rows came
+    back. Recovery must move them back, whether the crash came before
+    the swap marker was removed or after."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    import engage_spark.io as eio
+    from engage_spark.io import (
+        _swap_recover,
+        delete_rows,
+        read_with_deletes,
+        upsert_dataset,
+        zorder_write,
+    )
+    from engage_spark.versioning import (
+        latest_version,
+        read_version,
+        version_log_enable,
+        version_log_enabled,
+    )
+
+    p = str(tmp_path / "stashed")
+    zorder_write(
+        spark,
+        spark.range(0, 100).select(
+            F.col("id").alias("k"), (F.col("id") % 7).alias("a")
+        ),
+        p, ["k", "a"], num_files=2,
+    )
+    version_log_enable(spark, p)
+    delete_rows(spark, p, [1, 2, 3], "k")
+
+    def crash(*a, **k):
+        raise _Crash()
+
+    monkeypatch.setattr(eio, "_restore_sidecars", crash)
+    if marker_left:
+        store = get_commit_store()
+        real = store.replace_dir
+
+        def replace_then_crash(spark, src, dst):
+            real(spark, src, dst)
+            raise _Crash()
+
+        monkeypatch.setattr(store, "replace_dir", replace_then_crash)
+    with pytest.raises(_Crash):
+        upsert_dataset(
+            spark, p, spark.createDataFrame([(5, 50)], "k long, a long"), ["k"]
+        )
+    monkeypatch.undo()
+    assert not os.path.exists(f"{p}/_versions")  # stranded by the crash
+
+    assert _swap_recover(spark, p) is True
+    for side in ("_versions", "_deletes", "_zorder_meta"):
+        assert os.path.isdir(f"{p}/{side}"), side
+    assert not [n for n in os.listdir(tmp_path) if "__sidecar_" in n]
+    assert version_log_enabled(spark, p)
+    live = {r.k: r.a for r in read_with_deletes(spark, p).collect()}
+    assert not set(live) & {1, 2, 3} and live[5] == 50 and len(live) == 97
+    for v in range(1, latest_version(spark, p) + 1):
+        read_version(spark, p, v).collect()
+    assert _swap_recover(spark, p) is False  # nothing left to recover
+
+
+@pytest.mark.parametrize("payload", [b"{not json", b"{}", b""])
+def test_swap_recover_sets_a_malformed_marker_aside(
+    spark, tmp_path, caplog, payload
+):
+    """A swap marker whose payload names no staging copy used to be
+    deleted silently; it is now logged and renamed aside, and the
+    target is left as it is."""
+    import glob
+    import logging
+
+    from engage_spark.io import _SWAP_MARKER_SUFFIX, _swap_recover
+
+    store = get_commit_store()
+    tgt = str(tmp_path / "mm")
+    spark.range(3).write.parquet(tgt)
+    marker = f"{tgt}{_SWAP_MARKER_SUFFIX}"
+    assert store.put_if_absent(spark, marker, payload)
+    with caplog.at_level(logging.WARNING, logger="engage_spark.io"):
+        assert _swap_recover(spark, tgt) is True
+    assert store.read(spark, marker) is None
+    aside = glob.glob(f"{marker}.malformed-*")
+    assert len(aside) == 1
+    with open(aside[0], "rb") as fh:
+        assert fh.read() == payload
+    assert any("malformed" in r.getMessage() for r in caplog.records)
+    assert spark.read.parquet(tgt).count() == 3

@@ -445,15 +445,18 @@ def test_semdedup_assignment_is_cogrouped_no_full_broadcast(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_delete_vector_read_is_broadcast_anti_join(spark, tmp_path):
-    # the deletion-vector read path's scale contract: the sidecar
-    # (bounded by takedowns since the last vacuum) joins the scan by
-    # BROADCAST left-anti — never a shuffled/sort-merge join of the
-    # corpus against its own takedowns
+def test_delete_vector_read_is_broadcast_anti_join(spark, tmp_path, monkeypatch):
+    # the deletion-vector read path's scale contract: a sidecar too
+    # large for a literal filter (bounded by takedowns since the last
+    # vacuum) joins the scan by BROADCAST left-anti — never a
+    # shuffled/sort-merge join of the corpus against its own takedowns.
+    # _DELETES_ISIN_MAX is lowered so two keys take that path.
     from pyspark.sql import functions as F
 
+    import engage_spark.io as eio
     from engage_spark.io import delete_rows, read_with_deletes
 
+    monkeypatch.setattr(eio, "_DELETES_ISIN_MAX", 1)
     p = str(tmp_path / "dv_plan")
     spark.range(500).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("a")
@@ -462,6 +465,31 @@ def test_delete_vector_read_is_broadcast_anti_join(spark, tmp_path):
     plan = read_with_deletes(spark, p)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_small_delete_vector_read_is_a_pushed_literal_filter(spark, tmp_path):
+    # a takedown-sized sidecar costs no join at all: its keys become a
+    # NULL-keeping NOT IN literal filter that reaches the parquet scan
+    import re
+
+    from pyspark.sql import functions as F
+
+    from engage_spark.io import delete_rows, read_with_deletes
+    from engage_spark.versioning import read_version, version_log_enable
+
+    p = str(tmp_path / "dv_lit")
+    spark.range(500).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("a")
+    ).write.parquet(p)
+    version_log_enable(spark, p)
+    delete_rows(spark, p, [1, 2], "k")
+    for df in (read_with_deletes(spark, p), read_version(spark, p, 2)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan
+        assert re.search(r"PushedFilters: \[[^\]]*Or\(IsNull\(k\),Not\(In\(k", plan), (
+            plan[:2000]
+        )
+        assert sorted(r.k for r in df.filter(F.col("k") < 5).collect()) == [0, 3, 4]
 
 
 def test_delete_vector_read_preserves_pushdown(spark, tmp_path):
@@ -480,23 +508,32 @@ def test_delete_vector_read_preserves_pushdown(spark, tmp_path):
     delete_rows(spark, p, [1, 2], "k")
     df = read_with_deletes(spark, p).filter(F.col("a") > 3)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the pushed filter names the user predicate's column
+    # the pushed filter names the user predicate's column (the list
+    # may hold bracketed entries, e.g. the delete keys' In(k, [1,2]))
     import re
 
-    assert re.search(r"PushedFilters: \[[^\]]*GreaterThan\(a,3\)", plan), plan[:2000]
+    assert re.search(
+        r"PushedFilters: \[(?:[^\[\]]|\[[^\]]*\])*GreaterThan\(a,3\)", plan
+    ), plan[:2000]
 
 
 def test_read_version_preserves_pushdown_and_broadcast_deletes(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     # TIME TRAVEL keeps the parquet contract: a predicate composed on
     # read_version must reach the scan (the explicit file-list read is
     # still a pruned columnar scan, not a materialized snapshot), and
-    # that version's deletion vectors apply as a BROADCAST anti-join —
-    # the same scale shape as the live read_with_deletes path
+    # that version's deletion vectors, when too many for a literal
+    # filter, apply as a BROADCAST anti-join — the same scale shape as
+    # the live read_with_deletes path (_DELETES_ISIN_MAX is lowered so
+    # two keys take that path)
     import re
 
     from pyspark.sql import functions as F
+
+    import engage_spark.io as eio
+
+    monkeypatch.setattr(eio, "_DELETES_ISIN_MAX", 1)
 
     from engage_spark.io import delete_rows, zorder_write
     from engage_spark.versioning import read_version, version_log_enable

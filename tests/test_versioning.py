@@ -3775,6 +3775,69 @@ def test_commit_schema_fast_path_matches_spark_inference(spark, tmp_path):
     fast, _ = compare(df_ts, "lang")
     assert fast is None
 
+    # ... but with the parquet FOOTER in hand (what _commit_schema_json
+    # reads) timestamps are typed as Spark types them: INT96 is
+    # TIMESTAMP, Spark's NTZ is TIMESTAMP_NTZ — Spark's own schema in
+    # the footer metadata wins over inferTimestampNTZ — and a footer
+    # without it follows isAdjustedToUTC and the flag; NANOS is refused
+    def compare_footer(tgt, files, infer_ntz=True):
+        md = pq.read_metadata(os.path.join(tgt, files[0]))
+        fast = _schema_from_footer_and_dirs(
+            md.schema.to_arrow_schema(), files, md, infer_ntz=infer_ntz
+        )
+        ref = (
+            spark.read.option("basePath", tgt)
+            .option("mergeSchema", "false")
+            .parquet(*[f"{tgt}/{f}" for f in files])
+            .schema
+        )
+        return fast, ref
+
+    import pyarrow as pa
+
+    flag = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    df_both = spark.createDataFrame(
+        [(1, "en", datetime.datetime(2030, 1, 1, 12, 0),
+          datetime.datetime(2030, 1, 1, 12, 0))],
+        "k long, lang string, ts timestamp, ntz timestamp_ntz",
+    )
+    tgt = str(tmp_path / "sc_ts_both")
+    df_both.write.partitionBy("lang").parquet(tgt)
+    files = sorted(
+        os.path.relpath(p, tgt) for p in glob.glob(f"{tgt}/*/*.parquet")
+    )
+    pa_tgt = str(tmp_path / "sc_ts_arrow")
+    os.makedirs(f"{pa_tgt}/lang=en")
+    pq.write_table(
+        pa.table({
+            "k": [1],
+            "utc_us": pa.array([1], pa.timestamp("us", tz="UTC")),
+            "local_us": pa.array([1], pa.timestamp("us")),
+            "local_ms": pa.array([1], pa.timestamp("ms")),
+        }),
+        f"{pa_tgt}/lang=en/part-0.parquet",
+    )
+    try:
+        for on in ("true", "false"):
+            spark.conf.set(flag, on)
+            for t, fs in ((tgt, files), (pa_tgt, ["lang=en/part-0.parquet"])):
+                fast, ref = compare_footer(t, fs, infer_ntz=on == "true")
+                assert fast is not None and fast == ref, (on, t, fast, ref)
+    finally:
+        spark.conf.unset(flag)
+    got = {f.name: f.dataType.typeName() for f in compare_footer(tgt, files)[0]}
+    assert (got["ts"], got["ntz"]) == ("timestamp", "timestamp_ntz")
+    ns_tgt = str(tmp_path / "sc_ts_ns")
+    os.makedirs(ns_tgt)
+    pq.write_table(
+        pa.table({"k": [1], "t": pa.array([1], pa.timestamp("ns"))}),
+        f"{ns_tgt}/part-0.parquet",
+    )
+    md = pq.read_metadata(f"{ns_tgt}/part-0.parquet")
+    assert _schema_from_footer_and_dirs(
+        md.schema.to_arrow_schema(), ["part-0.parquet"], md
+    ) is None
+
     # refusals: partition classes Java parses differently from the
     # strict regexes — huge ints (decimal), exponent forms, padded
     # numerics — must return None
@@ -3791,3 +3854,82 @@ def test_commit_schema_fast_path_matches_spark_inference(spark, tmp_path):
     from pyspark.sql.types import StringType
 
     assert _infer_part_type({"2030-02-31"}) == StringType()
+
+
+def test_part_double_needs_a_fraction_digit(spark, tmp_path):
+    """"1." is a DECIMAL under Spark's partition inference (BigDecimal
+    with scale 0), not a double: the classifier must refuse it instead
+    of claiming DoubleType, while ".5" and "1.5" stay doubles."""
+    from pyspark.sql.types import DoubleType
+
+    from engage_spark.versioning import _infer_part_type
+
+    assert _infer_part_type({"1."}) is None
+    assert _infer_part_type({"-1."}) is None
+    assert _infer_part_type({".5", "1.5"}) == DoubleType()
+    tgt = str(tmp_path / "pdbl")
+    spark.range(1).write.parquet(f"{tgt}/p=1.")
+    assert spark.read.parquet(tgt).schema["p"].dataType != DoubleType()
+
+
+def test_footer_schema_refuses_root_file_beside_partitions():
+    """A root-level file followed by a partitioned one is a MIXED
+    layout; the first path's empty partition list must not read as
+    "not set yet" and let the second path's columns through."""
+    import pyarrow as pa
+
+    from engage_spark.versioning import _schema_from_footer_and_dirs
+
+    schema = pa.schema([("k", pa.int64())])
+    assert _schema_from_footer_and_dirs(
+        schema, ["part-0.parquet", "p=1/part-1.parquet"]
+    ) is None
+    assert _schema_from_footer_and_dirs(
+        schema, ["p=1/part-1.parquet", "part-0.parquet"]
+    ) is None
+    assert _schema_from_footer_and_dirs(schema, ["part-0.parquet"]) is not None
+
+
+def test_write_schema_gate_refuses_inexact_types(spark, tmp_path):
+    """zorder_append used to accept a TIMESTAMP batch into a
+    TIMESTAMP_NTZ table, after which read_version of the new version
+    failed to merge the schemas. The shared gate of append_dataset,
+    zorder_append and upsert_dataset refuses a type mismatch, casts an
+    exact widening, and every version stays readable."""
+    from pyspark.sql.types import IntegerType, TimestampNTZType
+
+    from engage_spark.io import append_dataset, upsert_dataset
+    from engage_spark.versioning import latest_version
+
+    p = str(tmp_path / "gate")
+
+    def batch(lo, ts_type, a_type="int"):
+        ts = F.timestamp_seconds(F.col("id") * 60)
+        if ts_type == "ntz":
+            ts = F.to_timestamp_ntz(ts.cast("string"))
+        return spark.range(lo, lo + 20).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 5).cast(a_type).alias("a"),
+            ts.alias("ts"),
+        )
+
+    zorder_write(spark, batch(0, "ntz"), p, ["k", "a"], num_files=2)
+    version_log_enable(spark, p)
+    bad = batch(100, "ltz")
+    for write in (
+        lambda: zorder_append(spark, bad, p),
+        lambda: append_dataset(spark, bad, p),
+        lambda: upsert_dataset(spark, p, bad, ["k"]),
+    ):
+        with pytest.raises(ValueError, match="ts: timestamp into timestamp_ntz"):
+            write()
+    # an exact widening (smallint into int) is cast, not refused
+    zorder_append(spark, batch(200, "ntz", a_type="smallint"), p)
+    upsert_dataset(spark, p, batch(5, "ntz", a_type="tinyint"), ["k"])
+    for v in range(1, latest_version(spark, p) + 1):
+        df = read_version(spark, p, v)
+        assert df.schema["ts"].dataType == TimestampNTZType()
+        assert df.schema["a"].dataType == IntegerType()
+        df.collect()
+    # 20 published + 20 appended + 5 new keys of the 20-row upsert
+    assert read_version(spark, p, latest_version(spark, p)).count() == 45

@@ -1689,94 +1689,80 @@ def _zorder_scale_frozen(
     2^53 would bucket approximately — the build-side overflow guard
     keeps bits*span inside long range long before that matters.)"""
     bits = meta["bits"]
-    if meta["scale"] == "minmax":
-        # one parsed expression per column and two projections in all:
-        # each withColumn re-analyzes the whole plan (~20 ms of driver
-        # time apiece). The slot is the least/greatest clamp,
-        # (v - lo) * (2^bits - 1) cast to bigint, `div` the span.
-        slots = []
-        for i, c in enumerate(meta["cols"]):
-            lo, hi = meta["lo"][c], meta["hi"][c]
-            q = "`" + c.replace("`", "``") + "`"
-            slots.append(
-                F.expr(
-                    f"CAST((least(greatest({q}, {lo}), {hi}) - {lo}) * "
-                    f"{(1 << bits) - 1} AS BIGINT) div {max(1, hi - lo)}"
-                ).alias(f"__zs{i}")
-            )
-        scaled = [f"__zs{i}" for i in range(len(slots))]
-        cols = [
-            f"`{c.replace('`', '``')}`"
-            for c in df.columns
-            if c != "__z" and c not in scaled  # replaced, as withColumn did
-        ]
-        return df.select(*cols, *slots).select(
-            *cols, zorder_column(scaled, bits).alias("__z")
-        )
     scaled, tmp = [], []
     bounds_rows = None  # all columns' boundary rows, loaded at most once
     for i, c in enumerate(meta["cols"]):
-        from pyspark.ml.feature import Bucketizer
+        if meta["scale"] == "minmax":
+            lo, hi = meta["lo"][c], meta["hi"][c]
+            span = max(1, hi - lo)
+            clamped = F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi))
+            df = df.withColumn(
+                f"__zn{i}",
+                ((clamped - F.lit(lo)) * F.lit((1 << bits) - 1)).cast("long"),
+            ).withColumn(f"__zs{i}", F.expr(f"__zn{i} div {span}"))
+            tmp += [f"__zn{i}", f"__zs{i}"]
+        else:
+            from pyspark.ml.feature import Bucketizer
 
-        if bounds_rows is None:
-            # ONE driver-side pyarrow read serves every rank
-            # column (bounded: ≤ 2^bits occupied slots per column);
-            # the per-column Spark filter+collect it replaces was
-            # ~0.5 s of job scheduling per column per maintenance
-            # op (r15 optimization round). Spark read stays the
-            # fallback for filesystems pyarrow can't reach.
-            from engage_spark.versioning import _pa_read_small
-
-            bounds_rows = _pa_read_small(
-                spark, f"{path}/_zorder_meta/bounds"
-            )
             if bounds_rows is None:
-                bounds_rows = [
-                    r.asDict()
-                    for r in spark.read.parquet(
-                        f"{path}/_zorder_meta/bounds"
-                    ).collect()
-                ]
-        rows = [r for r in bounds_rows if r["__ci"] == i]
-        null_slot = next(
-            (int(r["__s"]) for r in rows if r["__b"] is None), None
-        )
-        finite = sorted(
-            (int(r["__b"]), int(r["__s"]))
-            for r in rows
-            if r["__b"] is not None
-        )
-        if null_slot is None:
-            null_slot = finite[0][1] if finite else 0
-        if not finite:
-            # empty build (no occupied slots — the dataset was
-            # written from zero rows): every value lands on slot 0;
-            # Bucketizer would reject the degenerate [-inf, inf]
-            df = df.withColumn(f"__zs{i}", F.lit(0).cast("long"))
-            tmp.append(f"__zs{i}")
-            scaled.append(f"__zs{i}")
-            continue
-        splits = (
-            [float("-inf")]
-            + [float(b) for b, _ in finite[1:]]
-            + [float("inf")]
-        )
-        df = Bucketizer(
-            splits=splits,
-            inputCol=f"__bv{i}",
-            outputCol=f"__bk{i}",
-            handleInvalid="keep",  # NULL -> extra bucket len(splits)-1
-        ).transform(df.withColumn(f"__bv{i}", F.col(c).cast("double")))
-        from engage_spark.session import local_frame
+                # ONE driver-side pyarrow read serves every rank
+                # column (bounded: ≤ 2^bits occupied slots per column);
+                # the per-column Spark filter+collect it replaces was
+                # ~0.5 s of job scheduling per column per maintenance
+                # op (r15 optimization round). Spark read stays the
+                # fallback for filesystems pyarrow can't reach.
+                from engage_spark.versioning import _pa_read_small
 
-        smap = local_frame(
-            spark,
-            [(float(k), int(s)) for k, (_, s) in enumerate(finite)]
-            + [(float(len(splits) - 1), int(null_slot))],
-            f"__bk{i} double, __zs{i} long",
-        )
-        df = df.join(F.broadcast(smap), on=f"__bk{i}", how="left")
-        tmp += [f"__bv{i}", f"__bk{i}", f"__zs{i}"]
+                bounds_rows = _pa_read_small(
+                    spark, f"{path}/_zorder_meta/bounds"
+                )
+                if bounds_rows is None:
+                    bounds_rows = [
+                        r.asDict()
+                        for r in spark.read.parquet(
+                            f"{path}/_zorder_meta/bounds"
+                        ).collect()
+                    ]
+            rows = [r for r in bounds_rows if r["__ci"] == i]
+            null_slot = next(
+                (int(r["__s"]) for r in rows if r["__b"] is None), None
+            )
+            finite = sorted(
+                (int(r["__b"]), int(r["__s"]))
+                for r in rows
+                if r["__b"] is not None
+            )
+            if null_slot is None:
+                null_slot = finite[0][1] if finite else 0
+            if not finite:
+                # empty build (no occupied slots — the dataset was
+                # written from zero rows): every value lands on slot 0;
+                # Bucketizer would reject the degenerate [-inf, inf]
+                df = df.withColumn(f"__zs{i}", F.lit(0).cast("long"))
+                tmp.append(f"__zs{i}")
+                scaled.append(f"__zs{i}")
+                continue
+            splits = (
+                [float("-inf")]
+                + [float(b) for b, _ in finite[1:]]
+                + [float("inf")]
+            )
+            df = Bucketizer(
+                splits=splits,
+                inputCol=f"__bv{i}",
+                outputCol=f"__bk{i}",
+                handleInvalid="keep",  # NULL -> extra bucket len(splits)-1
+            ).transform(df.withColumn(f"__bv{i}", F.col(c).cast("double")))
+            from engage_spark.session import local_frame
+
+            smap = local_frame(
+                spark,
+                [(float(k), int(s)) for k, (_, s) in enumerate(finite)]
+                + [(float(len(splits) - 1), int(null_slot))],
+                f"__bk{i} double, __zs{i} long",
+            )
+            df = df.join(F.broadcast(smap), on=f"__bk{i}", how="left")
+            tmp += [f"__bv{i}", f"__bk{i}", f"__zs{i}"]
         scaled.append(f"__zs{i}")
     return df.withColumn("__z", zorder_column(scaled, bits)).drop(*tmp)
 
@@ -1951,77 +1937,14 @@ def zorder_append(
 _ZRANGES = "_zorder_ranges"
 
 
-# _zranges_pa's bounds: the file count (the stats/bloom harvests'
-# driver limit) and the rows read, two int64 columns each on the driver
-_ZRANGES_DRIVER_MAX = 256
-_ZRANGES_DRIVER_ROWS = 2_000_000
-
-
-def _zranges_pa(uris: list, m: dict) -> list | None:
-    """[(file_uri, z_lo, z_hi)] computed on the driver — the
-    ``_zranges_scan`` twin for a bounded file set on a minmax curve
-    over bigint columns. Reads only the clustered columns with pyarrow
-    and replays the frozen scaling and the bit interleave in int64
-    numpy: clamp to [lo, hi] (a NULL scales as lo, as Spark's
-    ``greatest`` skips it), ``(v - lo) * (2^bits - 1)`` integer-divided
-    by the span, bit b of column i to bit ``n*b + i`` — the integer
-    arithmetic of Spark's expression, so every range is exact. A
-    zero-row file has no range, as ``input_file_name`` gives it none.
-    None (the caller runs the Spark scan) for a rank curve, a column
-    that is not bigint, more than ``_ZRANGES_DRIVER_MAX`` files or
-    ``_ZRANGES_DRIVER_ROWS`` rows, or any read failure."""
-    if m["scale"] != "minmax" or len(uris) > _ZRANGES_DRIVER_MAX:
-        return None
-    try:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from engage_spark.versioning import _pa_fs_for
-
-        cols, bits = m["cols"], m["bits"]
-        mult, rows, out = (1 << bits) - 1, 0, []
-        for uri in uris:
-            fs, p = _pa_fs_for(uri)
-            with fs.open_input_file(p) as fh:
-                pf = pq.ParquetFile(fh)
-                rows += pf.metadata.num_rows
-                if rows > _ZRANGES_DRIVER_ROWS:
-                    return None
-                if pf.metadata.num_rows == 0:
-                    continue
-                tbl = pf.read(columns=cols)
-            z = np.zeros(tbl.num_rows, dtype=np.int64)
-            for i, c in enumerate(cols):
-                col = tbl.column(c)
-                if not pa.types.is_int64(col.type):
-                    return None
-                lo, hi = m["lo"][c], m["hi"][c]
-                v = np.clip(col.fill_null(lo).to_numpy(), lo, hi)
-                scaled = (v - lo) * mult // max(1, hi - lo)
-                for b in range(bits):
-                    z += ((scaled >> b) & 1) << (len(cols) * b + i)
-            out.append((uri, int(z.min()), int(z.max())))
-        return out
-    except Exception:  # noqa: BLE001 — the Spark scan is the fallback
-        return None
-
-
 def _zranges_scan(spark: SparkSession, path: str, only_files=None) -> list:
     """Exact [(file_uri, z_lo, z_hi)] by recomputing every row's
     Z-value with the FROZEN meta over the whole dataset (or over
-    `only_files` — the increment-sized maintenance case). A bounded
-    file set on a minmax curve is computed on the driver
-    (``_zranges_pa``, no Spark job); otherwise one Spark scan."""
+    `only_files` — the increment-sized maintenance case), scanned with
+    the log's schema."""
     from engage_spark.versioning import _logged_reader
 
     m = zorder_meta(spark, path)
-    got = _zranges_pa(
-        sorted(only_files) if only_files else sorted(_input_files(spark, path)),
-        m,
-    )
-    if got is not None:
-        return got
     # a leaf-file read without basePath discovers no partition
     # columns, so the logged schema must not name them either
     src = (
@@ -3280,9 +3203,10 @@ def read_with_deletes(spark: SparkSession, path: str) -> DataFrame:
     corpus taking down by both doc_id and user_id, or a multi-key
     restore_version re-record): each batch part is a single-column
     file, and every key column's batch applies. A version-logged
-    dataset is scanned with the log's schema, and a small sidecar
-    (the common takedown shape) is read driver-side and applied as a
-    literal NOT IN filter, so the read plans with no Spark job;
+    dataset is scanned with the log's schema, and a sidecar of at
+    most ``_DELETES_LITERAL_MAX`` rows (the common takedown shape) is
+    read driver-side and applied as a literal NOT IN filter, so the
+    read plans with no Spark job;
     otherwise the keys broadcast-anti-join the scan
     (``_drop_deleted_keys``). Rows whose key is NULL stay either way,
     and NULL keys in a batch are no-ops (an anti-join never matches
@@ -3295,12 +3219,24 @@ def read_with_deletes(spark: SparkSession, path: str) -> DataFrame:
     return _drop_deleted_keys(spark, df, [f"{path}/{_DELETES}"])
 
 
-# Delete-key batches up to this many distinct keys per column are
-# applied as In-literal predicates: read_with_deletes and time travel
-# filter with NOT IN, and apply_deletes finds victims with IN (parquet
-# footer pruning skips clean files without reading them). Larger
-# batches fall back to a broadcast anti-/semi-join over a Spark read.
+# apply_deletes collects delete-key batches up to this many distinct
+# keys per column and finds victims with an In-literal predicate
+# (parquet footer pruning skips clean files without reading them);
+# larger batches broadcast-semi-join a column-pruned scan.
 _DELETES_ISIN_MAX = 100_000
+
+# Reads (read_with_deletes, and read_version, read_keys and
+# read_where through _apply_pending_dvs) apply delete-key batches of
+# up to this many rows as a literal NOT IN filter; larger batches
+# broadcast-anti-join. Each read parses the literal list again, so
+# the bound is the measured crossover
+# (scripts/measure_delete_filter_crossover.py: read_with_deletes plus
+# a full aggregate on local[4], 4 cores, literal against broadcast,
+# median of 5) — 200k rows: 1k keys 0.35 s vs 0.56 s, 3k 0.33 vs
+# 0.41, 5k 0.38 vs 0.31, 10k 0.56 vs 0.30, 100k 6.25 vs 0.39; 20k
+# rows: 1k 0.37 vs 0.47, 3k 0.37 vs 0.37, 5k 0.33 vs 0.34, 7k 0.44
+# vs 0.29, 10k 0.53 vs 0.28.
+_DELETES_LITERAL_MAX = 3_000
 
 
 def _keys_in(col: str, keys, negate: bool = False):
@@ -3322,15 +3258,26 @@ def _keys_in(col: str, keys, negate: bool = False):
     return F.expr(f"{q} IS NULL OR NOT ({sql})" if negate else sql)
 
 
-def _delete_keys_pa(spark: SparkSession, dirs: list) -> dict | None:
+def _delete_keys_pa(
+    spark: SparkSession, dirs: list, max_rows: int
+) -> dict | None:
     """{key column: set of its non-NULL keys} across the delete-key
     batch dirs `dirs`, read driver-side with ``_pa_read_small``. None —
     the caller then reads with Spark — when a dir cannot be read that
     way or holds no rows (a missing batch must fail loud there), when
-    a column holds anything but integers or strings, or when a column
-    holds more than ``_DELETES_ISIN_MAX`` keys."""
-    from engage_spark.versioning import _pa_read_small
+    a column holds anything but integers or strings, or when the
+    batches hold more than `max_rows` rows in all, counted from the
+    parquet footers before any row is read."""
+    from engage_spark.versioning import _pa_footer_rows, _pa_read_small
 
+    n = 0
+    for d in dirs:
+        rows = _pa_footer_rows(spark, d)
+        if not rows:
+            return None
+        n += rows
+        if n > max_rows:
+            return None
     out: dict = {}
     kinds: dict = {}
     for d in dirs:
@@ -3346,21 +3293,20 @@ def _delete_keys_pa(spark: SparkSession, dirs: list) -> dict | None:
                 if kind not in (int, str) or kinds.setdefault(c, kind) is not kind:
                     return None
                 keys.add(k)
-    if any(len(ks) > _DELETES_ISIN_MAX for ks in out.values()):
-        return None
     return out
 
 
 def _drop_deleted_keys(spark: SparkSession, df: DataFrame, dirs: list):
     """`df` without the rows whose key is in the delete-key batches
     under `dirs` (the `_deletes` sidecar, or a version's pending
-    deletes_vN batches). A small batch (``_delete_keys_pa``) becomes a
-    literal ``key IS NULL OR key NOT IN (...)`` filter — no Spark job
+    deletes_vN batches). A batch of at most ``_DELETES_LITERAL_MAX``
+    rows (``_delete_keys_pa``) becomes a literal
+    ``key IS NULL OR key NOT IN (...)`` filter — no Spark job
     to read or broadcast the keys, and the filter pushes into the
     scan; anything else anti-joins a broadcast Spark read of the
     batches, one join per key column. Either way a row whose key is
     NULL stays, exactly as under a left-anti join."""
-    keys = _delete_keys_pa(spark, dirs)
+    keys = _delete_keys_pa(spark, dirs, _DELETES_LITERAL_MAX)
     if keys is not None:
         for c, ks in keys.items():
             if ks:
@@ -3520,8 +3466,8 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
     the key column (r14) prunes the candidate FILE LIST driver-side
     before any scan is planned; larger batches broadcast-semi-join one
     column-pruned scan. Victim count is bounded by the file count.
-    The sidecar is read driver-side when it is small
-    (``_delete_keys_pa``): ``per_key`` then maps each column to its
+    A sidecar of at most ``_DELETES_ISIN_MAX`` rows is read
+    driver-side (``_delete_keys_pa``): ``per_key`` then maps each column to its
     sorted key list instead of a DataFrame, and neither the counts nor
     the In-literal need a Spark job. The dataset is scanned with the
     log's schema."""
@@ -3537,7 +3483,7 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
         for st in sfs.listStatus(sp)
         if not st.getPath().getName().startswith(("_", "."))
     )
-    small = _delete_keys_pa(spark, [f"{path}/{_DELETES}"])
+    small = _delete_keys_pa(spark, [f"{path}/{_DELETES}"], _DELETES_ISIN_MAX)
     if small is not None:
         per_key = {c: sorted(ks) for c, ks in small.items()}
         counts = {c: len(ks) for c, ks in per_key.items()}
@@ -4389,20 +4335,18 @@ def _gate_write_schema(
     field metadata aside. A column whose type differs is cast when the
     cast is exact (``_exact_cast``) and refused otherwise: a TIMESTAMP
     batch committed into a TIMESTAMP_NTZ table would make every read
-    spanning both file sets fail to merge the schemas. New columns are not this gate's business (upsert's
-    ``_check_merge_schema`` governs them); `skip` names the partition
-    columns, whose type comes from the directory names. The dataset's
-    type comes from the version log, else from one inference over its
-    files; with neither (no data yet) the batch passes unchanged."""
+    spanning both file sets fail to merge the schemas. New columns
+    are not this gate's business (upsert's ``_check_merge_schema``
+    governs them); `skip` names the partition columns, whose type
+    comes from the directory names. The dataset's types come from the
+    version log, so the gate costs no Spark job; a dataset whose log
+    records no schema, or that has no log, passes unchanged."""
     from engage_spark.versioning import _schema_at, _vlog_entries
 
     entries = _vlog_entries(spark, path)  # [] without a log
     want = _schema_at(entries, entries[-1]["version"]) if entries else None
     if want is None:
-        try:
-            want = spark.read.parquet(path).schema
-        except Exception:  # noqa: BLE001 — empty/absent: nothing to gate
-            return df
+        return df
     have = {f.name: f.dataType for f in df.schema.fields}
     casts, bad = {}, []
     for f in want.fields:

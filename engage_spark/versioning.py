@@ -449,6 +449,18 @@ def _pa_dir_for(spark: SparkSession, dir_path: str):
     return _pa_fs_for(uri)
 
 
+def _pa_parts(pafs, pp: str) -> list:
+    """The parquet part files of a sidecar dir (pyarrow FileInfos),
+    `_`/`.`-prefixed names skipped."""
+    from pyarrow.fs import FileSelector
+
+    return [
+        fi
+        for fi in pafs.get_file_info(FileSelector(pp, recursive=False))
+        if fi.type.name == "File" and not fi.base_name.startswith(("_", "."))
+    ]
+
+
 def _pa_read_small(
     spark: SparkSession, dir_path: str, columns: list | None = None
 ) -> list | None:
@@ -462,15 +474,10 @@ def _pa_read_small(
     should not schedule distributed work for metadata-sized state)."""
     try:
         import pyarrow.parquet as pq
-        from pyarrow.fs import FileSelector
 
         pafs, pp = _pa_dir_for(spark, dir_path)
-        infos = pafs.get_file_info(FileSelector(pp, recursive=False))
         rows: list = []
-        for fi in infos:
-            name = fi.base_name
-            if fi.type.name != "File" or name.startswith(("_", ".")):
-                continue
+        for fi in _pa_parts(pafs, pp):
             rows.extend(
                 pq.read_table(fi.path, filesystem=pafs, columns=columns)
                 .to_pylist()
@@ -479,6 +486,26 @@ def _pa_read_small(
     except FileNotFoundError:
         return []
     except Exception:  # noqa: BLE001 — fallback, never a wrong answer
+        return None
+
+
+def _pa_footer_rows(spark: SparkSession, dir_path: str) -> int | None:
+    """The row count of a parquet sidecar dir, summed from its parts'
+    footers without reading a row — sizes a read before
+    ``_pa_read_small`` pulls it onto the driver. Missing dir counts 0;
+    None on any other failure."""
+    try:
+        import pyarrow.parquet as pq
+
+        pafs, pp = _pa_dir_for(spark, dir_path)
+        n = 0
+        for fi in _pa_parts(pafs, pp):
+            with pafs.open_input_file(fi.path) as fh:
+                n += pq.read_metadata(fh).num_rows
+        return n
+    except FileNotFoundError:
+        return 0
+    except Exception:  # noqa: BLE001 — the caller reads with Spark
         return None
 
 

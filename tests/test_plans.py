@@ -450,13 +450,13 @@ def test_delete_vector_read_is_broadcast_anti_join(spark, tmp_path, monkeypatch)
     # large for a literal filter (bounded by takedowns since the last
     # vacuum) joins the scan by BROADCAST left-anti — never a
     # shuffled/sort-merge join of the corpus against its own takedowns.
-    # _DELETES_ISIN_MAX is lowered so two keys take that path.
+    # _DELETES_LITERAL_MAX is lowered so two keys take that path.
     from pyspark.sql import functions as F
 
     import engage_spark.io as eio
     from engage_spark.io import delete_rows, read_with_deletes
 
-    monkeypatch.setattr(eio, "_DELETES_ISIN_MAX", 1)
+    monkeypatch.setattr(eio, "_DELETES_LITERAL_MAX", 1)
     p = str(tmp_path / "dv_plan")
     spark.range(500).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("a")
@@ -525,7 +525,7 @@ def test_read_version_preserves_pushdown_and_broadcast_deletes(
     # still a pruned columnar scan, not a materialized snapshot), and
     # that version's deletion vectors, when too many for a literal
     # filter, apply as a BROADCAST anti-join — the same scale shape as
-    # the live read_with_deletes path (_DELETES_ISIN_MAX is lowered so
+    # the live read_with_deletes path (_DELETES_LITERAL_MAX is lowered so
     # two keys take that path)
     import re
 
@@ -533,7 +533,7 @@ def test_read_version_preserves_pushdown_and_broadcast_deletes(
 
     import engage_spark.io as eio
 
-    monkeypatch.setattr(eio, "_DELETES_ISIN_MAX", 1)
+    monkeypatch.setattr(eio, "_DELETES_LITERAL_MAX", 1)
 
     from engage_spark.io import delete_rows, zorder_write
     from engage_spark.versioning import read_version, version_log_enable

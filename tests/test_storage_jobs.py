@@ -113,14 +113,14 @@ def _step(spark, path: str, k0: int, step: int) -> dict:
 
 # Exact job counts per op, per step. Every job left reads or writes
 # data:
-# - zorder_append: the range-partition sample and the write (the
-#   z-range manifest's increment is computed on the driver);
+# - zorder_append: the range-partition sample and the write;
 # - upsert_dataset: the batch's key-uniqueness check (2) and the merged
 #   rewrite (3, with its broadcast of the batch keys);
 # - delete_rows: none, the 20-key batch is written with pyarrow;
 # - reads: none to plan, one to collect;
-# - maintain_dataset: apply_deletes' victim scan (2) and survivor
-#   rewrite (2), then optimize's rewrite (2).
+# - maintain_dataset: apply_deletes' victim scan (2), survivor
+#   rewrite (2) and z-range scan of the rewritten files (2), then
+#   optimize's rewrite (2) and z-range scan (2).
 EXPECTED_JOBS = [
     {
         "zorder_append": 2, "upsert_dataset": 5, "delete_rows": 0,
@@ -131,7 +131,7 @@ EXPECTED_JOBS = [
         "zorder_append": 2, "upsert_dataset": 5, "delete_rows": 0,
         "read_with_deletes": (0, 1), "read_keys": (0, 1),
         "read_where": (0, 1), "read_version": (0, 1),
-        "maintain_dataset": 6,
+        "maintain_dataset": 10,
     },
 ]
 
@@ -321,8 +321,8 @@ def test_delete_filter_falls_back_to_broadcast_join(spark, tmp_path, monkeypatch
         F.broadcast(spark.createDataFrame([(1,), (2,), (3,)], "k long")),
         "k", "left_anti",
     )
-    # above _DELETES_ISIN_MAX: the broadcast anti-join, same rows
-    monkeypatch.setattr(io, "_DELETES_ISIN_MAX", 2)
+    # above _DELETES_LITERAL_MAX: the broadcast anti-join, same rows
+    monkeypatch.setattr(io, "_DELETES_LITERAL_MAX", 2)
     for df in (
         io.read_with_deletes(spark, path),
         versioning.read_version(spark, path, versioning.latest_version(spark, path)),
@@ -350,29 +350,53 @@ def test_delete_filter_falls_back_to_broadcast_join(spark, tmp_path, monkeypatch
     assert sorted(r.v for r in got.collect()) == [0, 1, 3, 4, 5, 6, 7, 8, 9]
 
 
-def test_driver_zranges_equal_the_spark_scan(spark, tmp_path, monkeypatch):
-    # the driver replay of the frozen curve must give every file the
-    # exact range the Spark scan computes: out-of-range keys saturate,
-    # NULLs scale as lo, and a zero-row file has no range
-    path = _table(spark, tmp_path, rows=500)
-    io.zorder_append(spark, _orders(spark, 10**7, 40).withColumn(
-        "o_custkey",
-        F.when(F.col("o_orderkey") % 4 == 0, None).otherwise(-F.col("o_custkey")),
-    ), path)
-    spark.createDataFrame([], _orders(spark, 0, 1).schema).write.mode(
-        "append"
-    ).parquet(path)
-    uris = sorted(io._input_files(spark, path))
-    m = io.zorder_meta(spark, path)
-    fast = io._zranges_pa(uris, m)
-    monkeypatch.setattr(io, "_zranges_pa", lambda *a: None)
-    slow = io._zranges_scan(spark, path)
-    assert fast is not None and sorted(fast) == sorted(slow)
-    assert len(fast) == len(uris) - 1  # the zero-row file has none
-    # outside the driver path's reach: the Spark scan answers
-    assert io._zranges_pa(uris, {**m, "scale": "rank"}) is None
-    monkeypatch.setattr(io, "_ZRANGES_DRIVER_MAX", 1)
-    assert io._zranges_pa(uris, m) is None
+def test_delete_filter_bound_reads_no_rows_above_it(spark, tmp_path, monkeypatch):
+    # a sidecar above the literal-filter bound is sized from its parquet
+    # footers: no key row reaches the driver, and the read joins
+    path = _null_key_table(spark, tmp_path, versioned=True)
+    io.delete_rows(spark, path, [1, 2, 3], "k")
+    io.delete_rows(spark, path, [4, 5], "k")
+    monkeypatch.setattr(io, "_DELETES_LITERAL_MAX", 4)
+    import pyarrow.parquet as pq
+
+    read_table = pq.read_table
+    reads = []
+
+    def counting_read_table(*a, **k):
+        reads.append(a[0] if a else k.get("source"))
+        return read_table(*a, **k)
+
+    monkeypatch.setattr(pq, "read_table", counting_read_table)
+    assert io._delete_keys_pa(spark, [f"{path}/_deletes"], 4) is None
+    v = versioning.latest_version(spark, path)
+    pending = [
+        f"{path}/{versioning._VRETAINED}/deletes_v{pv}"
+        for pv in versioning._pending_delete_versions(
+            versioning._vlog_entries(spark, path), v
+        )
+    ]
+    assert len(pending) == 2
+    assert io._delete_keys_pa(spark, pending, 4) is None
+    assert not [r for r in reads if "/_deletes/" in r or "/deletes_v" in r]
+    for df in (io.read_with_deletes(spark, path), versioning.read_version(spark, path, v)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+        assert sorted(r.k for r in df.filter(F.col("k") < 8).collect()) == [6, 7]
+    monkeypatch.undo()
+    # at the bound the batches are read and applied as the literal filter
+    assert io._delete_keys_pa(spark, [f"{path}/_deletes"], 5) == {"k": {1, 2, 3, 4, 5}}
+
+
+def test_unversioned_writes_launch_only_data_jobs(spark, tmp_path):
+    # without a version log the write-schema gate has no logged types to
+    # check, so it adds no schema-inference job to an append
+    path = str(tmp_path / "plain")
+    _orders(spark, 0, 200).coalesce(2).write.parquet(path)
+    _, jobs = _jobs(
+        spark, lambda: io.append_dataset(spark, _orders(spark, 200, 50), path)
+    )
+    assert jobs == 1  # the append's write
+    assert spark.read.parquet(path).count() == 250
 
 
 def _fail_fast_paths(monkeypatch):
@@ -387,7 +411,6 @@ def _fail_fast_paths(monkeypatch):
     monkeypatch.setattr(versioning, "_vlog_rows_pa", lambda *a, **k: None)
     monkeypatch.setattr(versioning, "_pa_dir_for", boom)
     monkeypatch.setattr(io, "_delete_keys_pa", lambda *a, **k: None)
-    monkeypatch.setattr(io, "_zranges_pa", lambda *a, **k: None)
 
 
 def test_ops_agree_with_every_fast_path_failing(spark, tmp_path, monkeypatch):

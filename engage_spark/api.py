@@ -565,8 +565,12 @@ def bm25_topk(
         # without a cache the corpus-tokenizing aggregate would run
         # once per site — exactly the double pass the r15 scalar-join
         # change removed (ADVICE r15). One-row frame; the default
-        # no-option path keeps its r15 plan untouched.
-        stats = stats.cache()
+        # no-option path keeps its r15 plan untouched. A lazy local
+        # checkpoint, not cache(): a cached plan stays matched by its
+        # source paths for the rest of the session, so a later call
+        # over rewritten documents at the same path would read these
+        # stale scalars; checkpoint blocks go with the frame.
+        stats = stats.localCheckpoint(eager=False)
         dfr = (
             dfr.crossJoin(F.broadcast(stats))
             .filter(F.col("df") <= F.col("__n") * F.lit(max_df_fraction))

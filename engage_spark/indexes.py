@@ -186,8 +186,34 @@ def _bloom_maybe_contains(bits: bytes, m: int, k: int, key_bytes: bytes) -> bool
     return _maybe_contains_pair(bits, m, k, h1, h2)
 
 
+def _bloom_canon(values) -> list:
+    """`_bloom_key_bytes` of every non-NULL value. An Arrow array of
+    integers or strings is canonicalized in Arrow — a decimal cast
+    and the type prefix — with no Python call per value; anything
+    else goes value by value."""
+    import pyarrow as pa
+
+    if isinstance(values, (pa.Array, pa.ChunkedArray)):
+        import pyarrow.compute as pc
+
+        t = values.type
+        if pa.types.is_integer(t) or pa.types.is_string(t):
+            arr = values.drop_null()
+            prefix = "s"
+            if pa.types.is_integer(t):
+                arr, prefix = pc.cast(arr, pa.string()), "i"
+            return (
+                pc.binary_join_element_wise(prefix, arr, "")
+                .cast(pa.binary())
+                .to_pylist()
+            )
+        values = values.to_pylist()
+    return [b for b in map(_bloom_key_bytes, values) if b is not None]
+
+
 def _build_bloom(values, fpp: float) -> tuple:
-    """(n_values, m_bits, k, bits) over canonicalized non-null values.
+    """(n_values, m_bits, k, bits) over canonicalized non-null values
+    (a Python iterable, or an Arrow array — `_bloom_canon`).
 
     Bit positions are computed in one vectorized numpy pass from the
     mod-m-reduced hash pair: (h1 + i*h2) % m == ((h1%m) + i*(h2%m)) % m
@@ -196,23 +222,21 @@ def _build_bloom(values, fpp: float) -> tuple:
     the old per-position Python loop put it (pinned by test), keeping
     new sidecars probe-compatible with old ones. The loop cost 100k+
     interpreter iterations per 24-file harvest (r15 optimization
-    round, guide §4.2: batch work belongs in vectorized native code)."""
-    canon = []
-    for v in values:
-        b = _bloom_key_bytes(v)
-        if b is not None:
-            canon.append(b)
+    round, guide §4.2: batch work belongs in vectorized native code).
+    The md5 digests are joined into one buffer and split into the
+    big-endian (h1, h2) words by numpy, as `_bloom_hash_pair` reads
+    them."""
+    canon = _bloom_canon(values)
     if not canon:
         return 0, 0, 0, b""
     m, k = _bloom_params(len(canon), fpp)
     import numpy as np
 
-    h1m = np.empty(len(canon), dtype=np.int64)
-    h2m = np.empty(len(canon), dtype=np.int64)
-    for j, b in enumerate(canon):
-        d = _hashlib.md5(b).digest()
-        h1m[j] = int.from_bytes(d[:8], "big") % m
-        h2m[j] = (int.from_bytes(d[8:16], "big") | 1) % m
+    words = np.frombuffer(
+        b"".join([_hashlib.md5(b).digest() for b in canon]), dtype=">u8"
+    ).reshape(-1, 2)
+    h1m = (words[:, 0] % np.uint64(m)).astype(np.int64)
+    h2m = ((words[:, 1] | np.uint64(1)) % np.uint64(m)).astype(np.int64)
     pos = (
         h1m[:, None] + np.arange(k, dtype=np.int64)[None, :] * h2m[:, None]
     ) % m
@@ -289,8 +313,7 @@ def _file_bloom_one(uri: str, rel: str, cols: list, fpp: float) -> list:
         if c not in names:
             rows.append((rel, c, 0, 0, 0, b""))
             continue
-        vals = pc.unique(tbl[c]).to_pylist()
-        rows.append((rel, c) + _build_bloom(vals, fpp))
+        rows.append((rel, c) + _build_bloom(pc.unique(tbl[c]), fpp))
     return rows
 
 
@@ -605,7 +628,13 @@ def read_keys(
     )
     df = _apply_pending_dvs(spark, path, entries, v, df)
     for c, vs in keysets.items():
-        df = df.filter(F.col(c).isin(vs))
+        if {type(x) for x in vs} in ({int}, {str}):
+            from engage_spark.io import _keys_in
+
+            # one parsed IN: Column.isin costs two py4j calls per key
+            df = df.filter(_keys_in(c, vs))
+        else:
+            df = df.filter(F.col(c).isin(vs))
     return df
 
 

@@ -11,6 +11,7 @@ pruning instead of filename string-matching.
 from __future__ import annotations
 
 import logging
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1100,15 +1101,11 @@ def zorder_column(scaled_cols, bits: int = 16):
     import functools
     import operator
 
-    n = len(scaled_cols)
     if all(isinstance(c, str) for c in scaled_cols):
-        quoted = [f"`{c}`" for c in scaled_cols]
-        terms_sql = [
-            f"shiftleft(cast((shiftright({q}, {b}) & 1) as bigint), {n * b + i})"
-            for b in range(bits)
-            for i, q in enumerate(quoted)
-        ]
-        return F.expr(" + ".join(terms_sql))
+        return F.expr(
+            _interleave_sql([f"`{c}`" for c in scaled_cols], bits)
+        )
+    n = len(scaled_cols)
     terms = [
         F.shiftleft(
             F.shiftright(c, b).bitwiseAND(F.lit(1)).cast("long"), n * b + i
@@ -1117,6 +1114,36 @@ def zorder_column(scaled_cols, bits: int = 16):
         for i, c in enumerate(scaled_cols)
     ]
     return functools.reduce(operator.add, terms)
+
+
+def _interleave_sql(scaled_sql: Sequence[str], bits: int) -> str:
+    """The Morton interleave of `zorder_column` over SQL operands
+    (quoted column names or whole scaling expressions)."""
+    n = len(scaled_sql)
+    return " + ".join(
+        f"shiftleft(cast((shiftright({q}, {b}) & 1) as bigint), {n * b + i})"
+        for b in range(bits)
+        for i, q in enumerate(scaled_sql)
+    )
+
+
+def _minmax_scale_sql(
+    col: str, lo: int, hi: int, bits: int, clamp: bool = False
+) -> str:
+    """The ONE definition of minmax z-scaling, as SQL:
+    ``(x - lo) * (2^bits - 1) div span`` in exact integer arithmetic,
+    with ``x`` clamped to [lo, hi] for frozen-curve increments
+    (`clamp`). zorder_values scales a build with it and
+    _zorder_scale_frozen every later increment, so both sides of the
+    frozen curve share it. Unsuffixed literals type as Spark's
+    ``F.lit`` of a Python int does (INT when it fits, else BIGINT)."""
+    x = "`" + col.replace("`", "``") + "`"
+    if clamp:
+        x = f"least(greatest({x}, ({lo})), ({hi}))"
+    return (
+        f"(CAST((({x} - ({lo})) * {(1 << bits) - 1}) AS BIGINT)"
+        f" div {max(1, hi - lo)})"
+    )
 
 
 def zorder_values(
@@ -1222,10 +1249,9 @@ def zorder_values(
                     "the curve — reduce bits, coarsen the quantization, or "
                     "use scale='rank'"
                 )
-            out = out.withColumn(
-                f"__zn{i}",
-                ((F.col(c) - F.lit(lo)) * F.lit((1 << bits) - 1)).cast("long"),
-            ).withColumn(f"__zs{i}", F.expr(f"__zn{i} div {span}"))
+            # scaled inline inside the one __z projection below
+            scaled.append(_minmax_scale_sql(c, lo, hi, bits))
+            continue
         else:
             cdf = cdf_all.filter(F.col("__ci") == i).drop("__ci")
             if n_distinct.get(i, 0) <= 500_000:
@@ -1244,10 +1270,10 @@ def zorder_values(
                 .drop("__before")
                 .withColumn(f"__zs{i}", F.expr(f"__zn{i} div {denom}"))
             )
-        scaled.append(f"__zs{i}")
+        scaled.append(f"`__zs{i}`")
         tmp += [f"__zn{i}", f"__zs{i}"]
-    out = out.withColumn("__z", zorder_column(scaled, bits)).drop(*tmp)
-    return out, stats
+    out = out.withColumn("__z", F.expr(_interleave_sql(scaled, bits)))
+    return (out.drop(*tmp) if tmp else out), stats
 
 
 # below this many TOTAL distinct (column, value) pairs the rank CDF
@@ -1510,7 +1536,9 @@ def _write_z_layout(
     part_cols: list,
     mode: str,
     path: str,
-) -> None:
+    materialized: bool = False,
+    ranges: bool = False,
+) -> dict | None:
     """The one layout-producing write every zorder path shares:
     range-partition on (partition cols, __z) — each task holds a
     contiguous (partition, z) run, so every partition dir gets
@@ -1518,7 +1546,16 @@ def _write_z_layout(
     write. A partitioned OVERWRITE pins partitionOverwriteMode=static
     per-write: under a session-level dynamic mode, a republish whose
     frame lacks some partition values would silently leave those dirs
-    on the PREVIOUS frozen curve while the meta says otherwise."""
+    on the PREVIOUS frozen curve while the meta says otherwise.
+
+    `materialized`: `out` already reads a checkpoint (the maintenance
+    pass's scaled snapshot), so it is not checkpointed again.
+    `ranges`: on a flat layout, the write also observes each task's
+    (min, max) ``__z`` — each task writes one file, so these are the
+    written files' exact z-ranges — and returns {task partition id:
+    (z_lo, z_hi)} for `_written_zranges`; None when not asked for, on
+    a partitioned layout (a task writes one file per partition dir),
+    or past ``_ZRANGES_OBSERVE_MAX`` tasks."""
     keys = [*part_cols, "__z"] if part_cols else ["__z"]
     # r16 (VERDICT r15 #9, the measured decision): repartitionByRange
     # evaluates `out` TWICE — once for the RangePartitioner's
@@ -1530,18 +1567,69 @@ def _write_z_layout(
     # sf1 s10b 5.73→4.97 / s15 5.01→4.68 — the executor-local write of
     # the scaled rows costs less than the second compute at both
     # scales, and the gap widens with data size.
-    out = out.localCheckpoint(eager=False)
-    w = (
-        out.repartitionByRange(n, *keys)
-        .sortWithinPartitions(*keys)
-        .drop("__z")
-        .write.mode(mode)
-    )
+    if not materialized:
+        out = out.localCheckpoint(eager=False)
+    laid = out.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
+    obs = None
+    if ranges and not part_cols and n <= _ZRANGES_OBSERVE_MAX:
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        aggs = []
+        for i in range(n):
+            z = F.when(F.col("__p") == i, F.col("__z"))
+            aggs += [F.min(z).alias(f"lo{i}"), F.max(z).alias(f"hi{i}")]
+        # the observed metrics ride the write job: no extra scan
+        laid = (
+            laid.withColumn("__p", F.spark_partition_id())
+            .observe(obs, *aggs)
+            .drop("__p")
+        )
+    w = laid.drop("__z").write.mode(mode)
     if part_cols:
         w = w.partitionBy(*part_cols)
         if mode == "overwrite":
             w = w.option("partitionOverwriteMode", "static")
     w.parquet(path)
+    if obs is None:
+        return None
+    got = obs.get
+    return {
+        i: (int(got[f"lo{i}"]), int(got[f"hi{i}"]))
+        for i in range(n)
+        if got[f"lo{i}"] is not None
+    }
+
+
+# `_write_z_layout` observes per-file z-ranges with two aggregate
+# expressions per task; a rewrite into more files than this refreshes
+# the z-range manifest with the increment scan instead, so the
+# observed aggregate stays small
+_ZRANGES_OBSERVE_MAX = 64
+
+_PART_ID_RE = re.compile(r"(?:^|-)part-(\d+)-")
+
+
+def _written_zranges(names: list, task_ranges: dict | None) -> dict | None:
+    """{name: (z_lo, z_hi)} for files `_write_z_layout` wrote flat,
+    matched to its observed per-task ranges by the task partition id
+    Spark puts in every part name (``part-00003-<job uuid>...``; a
+    commit's ``dup-`` rename keeps it). None — the caller scans — if
+    the names and the non-empty tasks do not match one to one."""
+    if task_ranges is None:
+        return None
+    out: dict = {}
+    seen: set = set()
+    for name in names:
+        m = _PART_ID_RE.search(name)
+        if "/" in name or m is None:
+            return None
+        tid = int(m.group(1))
+        if tid in seen or tid not in task_ranges:
+            return None
+        seen.add(tid)
+        out[name] = task_ranges[tid]
+    return out if seen == set(task_ranges) else None
 
 
 def _zorder_validate_args(df: DataFrame, cols, partition_by) -> None:
@@ -1693,14 +1781,13 @@ def _zorder_scale_frozen(
     bounds_rows = None  # all columns' boundary rows, loaded at most once
     for i, c in enumerate(meta["cols"]):
         if meta["scale"] == "minmax":
-            lo, hi = meta["lo"][c], meta["hi"][c]
-            span = max(1, hi - lo)
-            clamped = F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi))
-            df = df.withColumn(
-                f"__zn{i}",
-                ((clamped - F.lit(lo)) * F.lit((1 << bits) - 1)).cast("long"),
-            ).withColumn(f"__zs{i}", F.expr(f"__zn{i} div {span}"))
-            tmp += [f"__zn{i}", f"__zs{i}"]
+            # scaled inline inside the one __z projection below
+            scaled.append(
+                _minmax_scale_sql(
+                    c, meta["lo"][c], meta["hi"][c], bits, clamp=True
+                )
+            )
+            continue
         else:
             from pyspark.ml.feature import Bucketizer
 
@@ -1740,7 +1827,7 @@ def _zorder_scale_frozen(
                 # Bucketizer would reject the degenerate [-inf, inf]
                 df = df.withColumn(f"__zs{i}", F.lit(0).cast("long"))
                 tmp.append(f"__zs{i}")
-                scaled.append(f"__zs{i}")
+                scaled.append(f"`__zs{i}`")
                 continue
             splits = (
                 [float("-inf")]
@@ -1763,8 +1850,9 @@ def _zorder_scale_frozen(
             )
             df = df.join(F.broadcast(smap), on=f"__bk{i}", how="left")
             tmp += [f"__bv{i}", f"__bk{i}", f"__zs{i}"]
-        scaled.append(f"__zs{i}")
-    return df.withColumn("__z", zorder_column(scaled, bits)).drop(*tmp)
+        scaled.append(f"`__zs{i}`")
+    df = df.withColumn("__z", F.expr(_interleave_sql(scaled, bits)))
+    return df.drop(*tmp) if tmp else df
 
 
 def zorder_append(
@@ -1864,7 +1952,12 @@ def zorder_append(
 
     # versioned: stage (no lease) → shared rename+log commit tail
     staging = f"{path.rstrip('/')}{_APPEND_STAGING_INFIX}{_uuid.uuid4().hex[:12]}"
-    _write_z_layout(out, n, part_cols, "overwrite", staging)
+    # the staged files' z-ranges, observed by their write (a gate in
+    # drop mode rewrites the staging, so its files are scanned)
+    task_zranges = _write_z_layout(
+        out, n, part_cols, "overwrite", staging,
+        ranges=expectations is None,
+    )
     report: dict = {}
     if expectations is not None:
         staging, report = _expectation_gate(
@@ -1899,20 +1992,21 @@ def zorder_append(
         man = _zranges_read(spark, path)
         if man is None:
             return
-        from urllib.parse import urlparse
-
-        fs, p = _hadoop_fs(spark, path)
-        rootp = fs.makeQualified(p).toUri().getPath().rstrip("/")
+        rel = _uri_to_rel(spark, path)
         live = _input_files(spark, path)
         fset = set(final_names)
-        new_uris = {
-            u for u in live if urlparse(u).path[len(rootp) + 1:] in fset
-        }
+        new_uris = {u for u in live if rel(u) in fset}
         if {f for f, _, _ in man} != live - new_uris:
             return  # stale manifest: next stats/victim read rebuilds it
         if new_uris:
+            written = _written_zranges(final_names, task_zranges)
             _zranges_write(
-                spark, path, man + _zranges_scan(spark, path, new_uris)
+                spark, path,
+                man + (
+                    [(u, *written[rel(u)]) for u in sorted(new_uris)]
+                    if written is not None
+                    else _zranges_scan(spark, path, new_uris)
+                ),
             )
 
     _staged_append_commit(
@@ -1937,11 +2031,19 @@ def zorder_append(
 _ZRANGES = "_zorder_ranges"
 
 
-def _zranges_scan(spark: SparkSession, path: str, only_files=None) -> list:
+def _zranges_scan(
+    spark: SparkSession, path: str, only_files=None, keep: bool = False
+):
     """Exact [(file_uri, z_lo, z_hi)] by recomputing every row's
     Z-value with the FROZEN meta over the whole dataset (or over
     `only_files` — the increment-sized maintenance case), scanned with
-    the log's schema."""
+    the log's schema. With `keep` (whole-dataset scans only) it returns
+    (ranges, scaled): `scaled` is the lazily checkpointed frame the
+    ranges were reduced from — every row with its ``__z`` and
+    ``__file``, read with mergeSchema where the log has no stable
+    schema — which this scan's own job materializes, so a rewrite in
+    the same maintenance pass reuses the z-values instead of rescaling
+    every row."""
     from engage_spark.versioning import _logged_reader
 
     m = zorder_meta(spark, path)
@@ -1951,15 +2053,18 @@ def _zranges_scan(spark: SparkSession, path: str, only_files=None) -> list:
         _logged_reader(spark, path, drop=tuple(m["part_cols"]))
         .parquet(*sorted(only_files))
         if only_files
-        else _logged_reader(spark, path).parquet(path)
+        else _logged_reader(spark, path, merge=keep).parquet(path)
     )
     z = _zorder_scale_frozen(
         spark, src.withColumn("__file", F.input_file_name()), path, m
     )
+    if keep:
+        z = z.localCheckpoint(eager=False)
     per_file = z.groupBy("__file").agg(
         F.min("__z").alias("z_lo"), F.max("__z").alias("z_hi")
     ).collect()  # bounded: one row per data file
-    return [(r["__file"], int(r.z_lo), int(r.z_hi)) for r in per_file]
+    out = [(r["__file"], int(r.z_lo), int(r.z_hi)) for r in per_file]
+    return (out, z) if keep else out
 
 
 def _zranges_write(spark: SparkSession, path: str, rows: list) -> None:
@@ -2015,7 +2120,10 @@ def _zranges_drop(spark: SparkSession, path: str) -> None:
 
 
 def _zranges_refresh(
-    spark: SparkSession, path: str, kept_entries: list
+    spark: SparkSession,
+    path: str,
+    kept_entries: list,
+    written: dict | None = None,
 ) -> None:
     """Post-commit increment-sized refresh of the z-range manifest,
     shared by every staged swap (optimize, apply_deletes): kept
@@ -2024,14 +2132,31 @@ def _zranges_refresh(
     were pinned, and persisting its dead row would fail the
     manifest's exact-match validity check and force the next consumer
     into a full-dataset rescan (review-found) — then every other live
-    file gets one exact increment-sized scan."""
+    file gets one exact increment-sized scan, except the files whose
+    ranges the rewrite observed as it wrote them (`written`:
+    dataset-relative name -> (z_lo, z_hi), `_written_zranges`)."""
     current = _input_files(spark, path)
     kept = [e for e in kept_entries if e[0] in current]
     fresh = current - {f for f, _, _ in kept}
+    if written and fresh:
+        rel = _uri_to_rel(spark, path)
+        known = [(u, *written[rel(u)]) for u in fresh if rel(u) in written]
+        kept += known
+        fresh -= {u for u, _, _ in known}
     _zranges_write(
         spark, path,
         kept + (_zranges_scan(spark, path, fresh) if fresh else []),
     )
+
+
+def _uri_to_rel(spark: SparkSession, path: str):
+    """A function from a data-file URI as ``inputFiles`` lists it to
+    its dataset-relative name."""
+    from urllib.parse import unquote, urlparse
+
+    fs, p = _hadoop_fs(spark, path)
+    rootp = fs.makeQualified(p).toUri().getPath().rstrip("/")
+    return lambda u: unquote(urlparse(u).path)[len(rootp) + 1:]
 
 
 def _zorder_file_ranges(spark: SparkSession, path: str) -> list:
@@ -2044,21 +2169,34 @@ def _zorder_file_ranges(spark: SparkSession, path: str) -> list:
     takedown applied every row away) returns [] instead of dying on
     schema inference (review-found: it aborted the housekeeping
     pass's later steps)."""
+    return _layout_snapshot(spark, path)["ranges"]
+
+
+def _layout_snapshot(
+    spark: SparkSession, path: str, keep_rows: bool = False
+) -> dict:
+    """`_zorder_file_ranges` as maintain_dataset's layout snapshot:
+    {"ranges", "files" (the current file URIs), "scaled"}. With
+    `keep_rows`, a recompute scan keeps its checkpointed rows with
+    their z-values as "scaled" (`_zranges_scan(keep=True)`) for a
+    rewrite in the same pass; "scaled" is None when the manifest
+    answered or `keep_rows` is off."""
     from engage_spark.versioning import _live_names
 
     if not _live_names(spark, path):
-        return []
+        return {"ranges": [], "files": set(), "scaled": None}
     current = _input_files(spark, path)
     man = _zranges_read(spark, path)
     if man is not None and {f for f, _, _ in man} == current:
-        return man
+        return {"ranges": man, "files": current, "scaled": None}
     # mismatch (or no manifest): one exact scan rebuilds it. A ZERO-ROW
     # part file can never enter the manifest (input_file_name sees no
     # rows), so a dataset containing one keeps taking this scan path —
     # correct, just uncached; compaction removes such debris.
-    out = _zranges_scan(spark, path)
+    out = _zranges_scan(spark, path, keep=keep_rows)
+    out, scaled = out if keep_rows else (out, None)
     _zranges_write(spark, path, out)
-    return out
+    return {"ranges": out, "files": current, "scaled": scaled}
 
 
 def zorder_layout_stats(spark: SparkSession, path: str) -> dict:
@@ -2074,9 +2212,13 @@ def zorder_layout_stats(spark: SparkSession, path: str) -> dict:
     {"files", "overlap_pairs", "overlap_fraction", "avg_covering"} —
     avg_covering is the mean number of files a random Z-point hits,
     i.e. the read amplification of a curve-point lookup."""
+    return _layout_metrics(_zorder_file_ranges(spark, path))
+
+
+def _layout_metrics(fr: list) -> dict:
+    """zorder_layout_stats' sweep over per-file z-ranges."""
     import heapq
 
-    fr = _zorder_file_ranges(spark, path)
     if not fr:
         # empty dataset (no rows): nothing can overlap, nothing to
         # optimize — zeroed stats instead of max()-of-empty ValueError
@@ -2172,6 +2314,7 @@ def optimize_incremental(
     target_file_bytes: int = 128 * 1024 * 1024,
     lease_wait_s: float = 30.0,
     occ_retries: int = 2,
+    _layout: dict | None = None,
 ) -> dict:
     """PARTIAL OPTIMIZE in place: rewrite ONLY the files whose
     Z-ranges overlap another file's, leaving the (typically vast)
@@ -2234,7 +2377,12 @@ def optimize_incremental(
     above — with no log there is no safe unleased window — and there
     the ``lease_wait_s``/``occ_retries`` knobs do NOT apply: the
     whole-rewrite lease keeps the loud-fail default (two long
-    OPTIMIZE runs must never silently queue for hours)."""
+    OPTIMIZE runs must never silently queue for hours).
+
+    ``_layout`` is maintain_dataset's layout snapshot
+    (``_layout_snapshot``), measured just before: the
+    first attempt takes its victims from it and, when it holds the
+    scan's scaled rows, re-lays them without rescaling."""
     from engage_spark.versioning import (
         _live_names,
         _vlog_reconcile,
@@ -2266,7 +2414,7 @@ def optimize_incremental(
                 _optimize_swap_replay_pending(spark, path)
                 _applydv_replay_pending(spark, path)
         try:
-            st = _optimize_stage(spark, path, target_file_bytes)
+            st = _optimize_stage(spark, path, target_file_bytes, _layout)
         except Exception as e:
             # the no-lease stage reads the LIVE target; a concurrent
             # file-MOVING commit mid-scan surfaces as a missing-file
@@ -2292,10 +2440,13 @@ def optimize_incremental(
                 if st["man_live"]:
                     # increment-sized refresh: kept entries stay
                     # exact (live-filtered — a commuting commit may
-                    # have removed one); files landed by commuting
-                    # appenders since the pin are re-scanned exactly
-                    # like our staged files
-                    _zranges_refresh(spark, path, st["kept_entries"])
+                    # have removed one); our staged files take the
+                    # ranges their write observed, and files landed by
+                    # commuting appenders since the pin are re-scanned
+                    _zranges_refresh(
+                        spark, path, st["kept_entries"],
+                        _written_zranges(st["staged"], st["zranges"]),
+                    )
                 return {
                     "rewritten_files": len(st["victims"]),
                     "new_files": len(st["staged"]),
@@ -2303,7 +2454,8 @@ def optimize_incremental(
                 }
         # conflict: a commit since the pin REMOVED a victim — the
         # staged rewrite re-laid bytes that are no longer live; drop
-        # it and re-stage
+        # it and re-stage against a fresh measurement
+        _layout = None
         sfs, sp2 = _hadoop_fs(spark, st["staging"])
         if sfs.exists(sp2):
             sfs.delete(sp2, True)
@@ -2449,22 +2601,29 @@ def _optimize_victims(fr: list) -> set:
 
 
 def _optimize_stage(
-    spark: SparkSession, path: str, target_file_bytes: int
+    spark: SparkSession,
+    path: str,
+    target_file_bytes: int,
+    layout: dict | None = None,
 ) -> dict:
     """UNLEASED stage of the optimistic incremental OPTIMIZE: detect
-    victims (z-range manifest, else one exact scan), re-lay them on
-    the FROZEN curve into a unique staging SIBLING (outside the
-    dataset — readers never see it; a crashed stager's orphan is
-    vacuum-swept by age like the append/MERGE staging dirs). Returns
-    everything the commit tail needs; ``staging`` is None when fewer
-    than two files overlap (nothing to do)."""
+    victims (`layout` — a snapshot just measured — else the z-range
+    manifest, else one exact scan), re-lay them on the FROZEN curve
+    into a unique staging SIBLING (outside the dataset — readers never
+    see it; a crashed stager's orphan is vacuum-swept by age like the
+    append/MERGE staging dirs). Returns everything the commit tail
+    needs; ``staging`` is None when fewer than two files overlap
+    (nothing to do)."""
     import math
     import uuid as _uuid
 
-    man = _zranges_read(spark, path)
-    current = _input_files(spark, path)
-    man_live = man is not None and {f for f, _, _ in man} == current
-    fr = man if man_live else _zranges_scan(spark, path)
+    if layout is not None:
+        fr, man_live = layout["ranges"], True
+    else:
+        man = _zranges_read(spark, path)
+        current = _input_files(spark, path)
+        man_live = man is not None and {f for f, _, _ in man} == current
+        fr = man if man_live else _zranges_scan(spark, path)
     victims = _optimize_victims(fr)
     if len(victims) < 2:
         return {"staging": None, "n_files": len(fr), "man_live": man_live}
@@ -2475,13 +2634,23 @@ def _optimize_stage(
     staging = (
         f"{path.rstrip('/')}{_OPTIMIZE_STAGING_INFIX}{_uuid.uuid4().hex[:12]}"
     )
-    from engage_spark.versioning import _logged_reader
+    scaled = layout["scaled"] if layout is not None else None
+    if scaled is not None:
+        # the layout scan's rows already carry their z-values
+        if victims != layout["files"]:
+            scaled = scaled.filter(_keys_in("__file", victims))
+        out = scaled.drop("__file")
+    else:
+        from engage_spark.versioning import _logged_reader
 
-    victim_src = _logged_reader(
-        spark, path, base_path=path, merge=True
-    ).parquet(*sorted(victims))
-    out = _zorder_scale_frozen(spark, victim_src, path, m)
-    _write_z_layout(out, n_new, part_cols, "overwrite", staging)
+        victim_src = _logged_reader(
+            spark, path, base_path=path, merge=True
+        ).parquet(*sorted(victims))
+        out = _zorder_scale_frozen(spark, victim_src, path, m)
+    zranges = _write_z_layout(
+        out, n_new, part_cols, "overwrite", staging,
+        materialized=scaled is not None, ranges=man_live,
+    )
     from engage_spark.versioning import _relativize
 
     return {
@@ -2492,6 +2661,7 @@ def _optimize_stage(
         "kept_entries": [e for e in fr if e[0] not in victims],
         "man_live": man_live,
         "n_files": len(fr),
+        "zranges": zranges,
     }
 
 
@@ -3325,6 +3495,7 @@ def apply_deletes(
     target_file_bytes: int = 128 * 1024 * 1024,
     lease_wait_s: float = 30.0,
     occ_retries: int = 2,
+    _relayout: dict | None = None,
 ) -> dict:
     """Physically apply the deletion sidecar — FILE-TARGETED (r12):
     rewrite ONLY the files that contain a deleted key; every clean
@@ -3370,7 +3541,16 @@ def apply_deletes(
     landed serially after the apply (the documented re-append
     masking semantics are unchanged). :class:`TakedownConflict`
     after ``occ_retries``. Unversioned datasets keep the fully-leased
-    in-place swap, where the OCC knobs do not apply."""
+    in-place swap, where the OCC knobs do not apply.
+
+    ``_relayout`` is maintain_dataset's layout snapshot
+    (``_layout_snapshot``) when the incremental OPTIMIZE
+    due next would rewrite every live file: the first attempt then
+    takes every live file as a victim, with no detect scan, and re-lays
+    the survivors on the curve from the snapshot's scaled rows — the
+    takedown and the OPTIMIZE in ONE rewrite and one
+    ``vacuum_deletes`` commit, under this op's conflict rule. The
+    report then adds ``new_files`` and ``relayout``."""
     if not _deletes_has_parts(spark, path):
         return {"deleted_keys": 0, "rewritten_files": 0, "kept_files": 0}
     from engage_spark.versioning import (
@@ -3400,11 +3580,12 @@ def apply_deletes(
             # a predecessor's replay consumed the whole sidecar
             return {"deleted_keys": 0, "rewritten_files": 0, "kept_files": 0}
         try:
-            st = _applydv_stage(spark, path, target_file_bytes)
+            st = _applydv_stage(spark, path, target_file_bytes, _relayout)
         except Exception as e:
             # the no-lease stage reads the LIVE target; a concurrent
             # file-moving commit mid-scan IS a write conflict
             if _attempt < occ_retries and _is_missing_file_error(e):
+                _relayout = None
                 continue
             raise
         with maintenance_lease(spark, path, wait_s=lease_wait_s):
@@ -3435,14 +3616,19 @@ def apply_deletes(
                                 e for e in st["man_before"]
                                 if e[0] not in set(st["victims"])
                             ],
+                            _written_zranges(st["staged"], st["zranges"]),
                         )
-                return {
+                out = {
                     "deleted_keys": st["n"],
                     "rewritten_files": len(st["victims"]),
                     "kept_files": st["n_files"] - len(st["victims"]),
                 }
+                if st["relayout"]:
+                    out.update(new_files=len(st["staged"]), relayout=True)
+                return out
         # conflict: drop the stale staging and restage (picking up
-        # any newly-recorded keys)
+        # any newly-recorded keys) against a fresh detect scan
+        _relayout = None
         if st["staging"] is not None:
             sfs, sp2 = _hadoop_fs(spark, st["staging"])
             if sfs.exists(sp2):
@@ -3477,28 +3663,9 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
         version_log_enabled,
     )
 
-    sfs, sp = _hadoop_fs(spark, f"{path}/{_DELETES}")
-    sidecar_parts = sorted(
-        st.getPath().getName()
-        for st in sfs.listStatus(sp)
-        if not st.getPath().getName().startswith(("_", "."))
-    )
-    small = _delete_keys_pa(spark, [f"{path}/{_DELETES}"], _DELETES_ISIN_MAX)
-    if small is not None:
-        per_key = {c: sorted(ks) for c, ks in small.items()}
-        counts = {c: len(ks) for c, ks in per_key.items()}
-    else:
-        dels_all = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(f"{path}/{_DELETES}")
-        )
-        per_key = {
-            c: dels_all.select(c).filter(F.col(c).isNotNull()).dropDuplicates()
-            for c in dels_all.columns
-        }
-        counts = {c: kdf.count() for c, kdf in per_key.items()}
-    n = sum(counts.values())  # bounded: takedowns since the last vacuum
-    key_cols = list(per_key)
+    det = _applydv_keys(spark, path)
+    per_key, counts = det["per_key"], det["counts"]
+    key_cols = det["key_cols"]
     data = _logged_reader(spark, path).parquet(path)
     tagged = data.select(
         F.input_file_name().alias("__file"), *[F.col(c) for c in key_cols]
@@ -3558,11 +3725,43 @@ def _applydv_detect(spark: SparkSession, path: str) -> dict:
             r["__file"] for r in hits.select("__file").distinct().collect()
         }
     return {
-        "per_key": per_key,
-        "n": n,
-        "key_cols": key_cols,
+        **det,
         "victims": sorted(victim_set),
         "all_files": set(data.inputFiles()),
+    }
+
+
+def _applydv_keys(spark: SparkSession, path: str) -> dict:
+    """The deletion sidecar's immutable part names and its keys per
+    column: sorted lists when ``_delete_keys_pa`` reads it driver-side
+    (at most ``_DELETES_ISIN_MAX`` rows), else distinct-key DataFrames
+    (counted with one job each)."""
+    sfs, sp = _hadoop_fs(spark, f"{path}/{_DELETES}")
+    sidecar_parts = sorted(
+        st.getPath().getName()
+        for st in sfs.listStatus(sp)
+        if not st.getPath().getName().startswith(("_", "."))
+    )
+    small = _delete_keys_pa(spark, [f"{path}/{_DELETES}"], _DELETES_ISIN_MAX)
+    if small is not None:
+        per_key = {c: sorted(ks) for c, ks in small.items()}
+        counts = {c: len(ks) for c, ks in per_key.items()}
+    else:
+        dels_all = (
+            spark.read.option("mergeSchema", "true")
+            .parquet(f"{path}/{_DELETES}")
+        )
+        per_key = {
+            c: dels_all.select(c).filter(F.col(c).isNotNull()).dropDuplicates()
+            for c in dels_all.columns
+        }
+        counts = {c: kdf.count() for c, kdf in per_key.items()}
+    return {
+        "per_key": per_key,
+        "counts": counts,
+        # bounded: takedowns since the last vacuum
+        "n": sum(counts.values()),
+        "key_cols": list(per_key),
         "sidecar_parts": sidecar_parts,
     }
 
@@ -3574,13 +3773,18 @@ def _applydv_write_survivors(
     per_key: dict,
     target_file_bytes: int,
     staging: str,
-) -> None:
+    scaled: DataFrame | None = None,
+) -> dict | None:
     """Shared survivor rewrite: re-read ONLY the victims (basePath:
     hive-partitioned victims must keep their partition column values —
     the ADVICE r12 silent-data-loss shape; mergeSchema: victims
     spanning an s11-style evolution keep the union schema), anti-join
     every key batch, and re-lay on the frozen Z-curve / back into the
-    partition dirs as the dataset's layout demands."""
+    partition dirs as the dataset's layout demands. `scaled` is a
+    fused pass's checkpointed scan of every victim row with its
+    ``__z`` (and ``__file``): the survivors are filtered from it and
+    re-laid without rescaling. Returns a flat z-layout write's
+    observed per-task z-ranges (`_write_z_layout`), else None."""
     import math
 
     from engage_spark.versioning import _relativize
@@ -3595,9 +3799,13 @@ def _applydv_write_survivors(
     ]
     from engage_spark.versioning import _logged_reader
 
-    kept_rows = _logged_reader(
-        spark, path, base_path=path, merge=True
-    ).parquet(*victims)
+    kept_rows = (
+        scaled.drop("__file")
+        if scaled is not None
+        else _logged_reader(
+            spark, path, base_path=path, merge=True
+        ).parquet(*victims)
+    )
     for c, kdf in per_key.items():
         if not isinstance(kdf, list):
             kept_rows = kept_rows.join(
@@ -3612,8 +3820,10 @@ def _applydv_write_survivors(
         # and later zorder_appends keep the same layout contract
         m = zorder_meta(spark, path)
         _write_z_layout(
-            _zorder_scale_frozen(spark, kept_rows, path, m),
+            kept_rows if scaled is not None
+            else _zorder_scale_frozen(spark, kept_rows, path, m),
             n_new, part_cols, "overwrite", staging,
+            materialized=scaled is not None,
         )
     elif part_cols:
         # one task per (shuffle slot) grouped on the partition columns
@@ -3628,12 +3838,15 @@ def _applydv_write_survivors(
         # keep the survivors on the frozen curve so footer pruning and
         # later zorder_appends see the same layout contract
         m = zorder_meta(spark, path)
-        _write_z_layout(
-            _zorder_scale_frozen(spark, kept_rows, path, m),
+        return _write_z_layout(
+            kept_rows if scaled is not None
+            else _zorder_scale_frozen(spark, kept_rows, path, m),
             n_new, [], "overwrite", staging,
+            materialized=scaled is not None, ranges=True,
         )
     else:
         kept_rows.coalesce(n_new).write.mode("overwrite").parquet(staging)
+    return None
 
 
 def _apply_deletes_impl(
@@ -3711,24 +3924,47 @@ def _applydv_swap_manifest_exists(spark: SparkSession, path: str) -> bool:
 
 
 def _applydv_stage(
-    spark: SparkSession, path: str, target_file_bytes: int
+    spark: SparkSession,
+    path: str,
+    target_file_bytes: int,
+    relayout: dict | None = None,
 ) -> dict:
     """UNLEASED stage of the optimistic apply_deletes: pin the
     version, detect victims, rewrite survivors into a unique staging
     SIBLING. ``staging`` is None when no live file contains a deleted
     key (the commit then just settles the pending set and clears the
-    pinned sidecar parts)."""
+    pinned sidecar parts). With `relayout` (apply_deletes'
+    ``_relayout``) the victims are the snapshot's files, with no
+    detect scan, when they are exactly the live files at the pinned
+    version — a commit between the snapshot and the pin falls back to
+    the detect scan, since the conflict rule checks only commits after
+    the pin."""
     import uuid as _uuid
 
     from engage_spark.versioning import (
         _relativize,
+        _replay_files,
+        _vlog_entries,
         _vlog_reconcile,
-        latest_version,
     )
 
     _vlog_reconcile(spark, path)  # heal drift BEFORE pinning
-    pinned_v = latest_version(spark, path)
-    det = _applydv_detect(spark, path)
+    entries = _vlog_entries(spark, path)
+    pinned_v = entries[-1]["version"] if entries else 0
+    det = None
+    if relayout is not None:
+        files = sorted(relayout["files"])
+        if sorted(_relativize(spark, path, files)) == sorted(
+            _replay_files(entries, pinned_v)
+        ):
+            det = {
+                **_applydv_keys(spark, path),
+                "victims": files,
+                "all_files": set(files),
+            }
+    fused = det is not None
+    if det is None:
+        det = _applydv_detect(spark, path)
     st = {
         "pinned_v": pinned_v,
         "n": det["n"],
@@ -3738,6 +3974,7 @@ def _applydv_stage(
         "sidecar_parts": det["sidecar_parts"],
         "staging": None,
         "man_before": None,
+        "relayout": fused,
     }
     if not det["victims"]:
         return st
@@ -3750,15 +3987,16 @@ def _applydv_stage(
     staging = (
         f"{path.rstrip('/')}{_APPLYDV_STAGING_INFIX}{_uuid.uuid4().hex[:12]}"
     )
-    _applydv_write_survivors(
+    zranges = _applydv_write_survivors(
         spark, path, det["victims"], det["per_key"], target_file_bytes,
-        staging,
+        staging, scaled=relayout["scaled"] if fused else None,
     )
     st.update(
         staging=staging,
         staged=_staged_rel_files(spark, staging),
         victim_rel=_relativize(spark, path, det["victims"]),
         man_before=man_before,
+        zranges=zranges if man_before is not None else None,
     )
     return st
 
@@ -4479,20 +4717,7 @@ def _upsert_stage_partitioned(
         [c for c in updates.columns if c != delete_col],
         evolve_schema,
     )
-    if check_unique_keys:
-        dup = (
-            updates.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"updates batch has multiple rows for key "
-                f"{[dup[0][k] for k in key_cols]}; upsert semantics "
-                "need one row per key (delete rows included)"
-            )
+    _batch_keys(updates, key_cols, check_unique_keys)
     if delete_col is not None:
         inserts = updates.filter(~F.col(delete_col)).drop(delete_col)
         deletes = updates.filter(F.col(delete_col))
@@ -4678,6 +4903,54 @@ def _upsert_commit_partitioned(spark: SparkSession, target: str, st: dict):
     mfs.delete(mp, True)
 
 
+def _batch_keys(
+    updates: DataFrame, key_cols: list, check_unique: bool
+) -> list | None:
+    """Enforce an upsert batch's one-row-per-key contract (when
+    `check_unique`) and return its keys when they can stay on the
+    driver: the batch's optimized plan is a ``LocalRelation`` (a
+    ``createDataFrame`` of local rows) of at most
+    ``_DELETES_LITERAL_MAX`` rows, keyed by ONE integer or string
+    column with no NULL key. Those keys are collected with no Spark
+    job and checked here; every other batch returns None after one
+    aggregation job checks it. A NULL key stays on the Spark path
+    because the merge matches keys null-safely, which the literal
+    filter does not."""
+    keys = None
+    dtypes = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType)
+    if len(key_cols) == 1 and isinstance(
+        updates.schema[key_cols[0]].dataType, dtypes
+    ):
+        plan = updates._jdf.queryExecution().optimizedPlan()
+        if (
+            plan.getClass().getSimpleName() == "LocalRelation"
+            and plan.data().size() <= _DELETES_LITERAL_MAX
+        ):
+            keys = [r[0] for r in updates.select(key_cols[0]).collect()]
+            if any(k is None for k in keys):
+                keys = None
+    if check_unique:
+        if keys is not None:
+            seen: set = set()
+            dup = next((k for k in keys if k in seen or seen.add(k)), None)
+            dup = None if dup is None else [{key_cols[0]: dup}]
+        else:
+            dup = (
+                updates.groupBy(*key_cols)
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .filter(F.col("__n") > 1)
+                .limit(1)
+                .collect()
+            )
+        if dup:
+            raise ValueError(
+                f"updates batch has multiple rows for key "
+                f"{[dup[0][k] for k in key_cols]}; upsert semantics "
+                "need one row per key (delete rows included)"
+            )
+    return keys
+
+
 def _upsert_dataset_impl(
     spark: SparkSession,
     target: str,
@@ -4786,20 +5059,8 @@ def _upsert_dataset_impl(
             "upsert_dataset (optimistic stage/commit), not "
             "_upsert_dataset_impl"
         )
-    if check_unique_keys:
-        dup = (
-            updates.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"updates batch has multiple rows for key "
-                f"{[dup[0][k] for k in key_cols]}; upsert semantics "
-                "need one row per key (delete rows included)"
-            )
+    # a small local batch's keys, checked and kept on the driver
+    local_keys = _batch_keys(updates, key_cols, check_unique_keys)
     if delete_col is not None:
         inserts = updates.filter(~F.col(delete_col)).drop(delete_col)
         deletes = updates.filter(F.col(delete_col))
@@ -4848,7 +5109,15 @@ def _upsert_dataset_impl(
         if vlog:
             _vlog_reconcile(spark, target)
             old_names = _live_names(spark, target)
-        survivors = tgt.join(F.broadcast(ukeys), key_cond(tgt), "left_anti")
+        if local_keys is not None:
+            # the batch keys as a literal filter: no broadcast job
+            survivors = tgt.filter(
+                _keys_in(key_cols[0], set(local_keys), negate=True)
+            )
+        else:
+            survivors = tgt.join(
+                F.broadcast(ukeys), key_cond(tgt), "left_anti"
+            )
         merged = _merge_union(survivors, inserts, new_cols)
         merged.write.mode("overwrite").parquet(staging)
         if vlog:

@@ -38,9 +38,11 @@ from engage_spark.io import (
     _deletes_has_parts,
     _evolution_marker_exists,
     _hadoop_fs,
+    _layout_metrics,
+    _layout_snapshot,
+    _optimize_victims,
     apply_deletes,
     optimize_incremental,
-    zorder_layout_stats,
 )
 from engage_spark.versioning import (
     _VRETAINED,
@@ -224,6 +226,18 @@ def maintain_dataset(
        retained storage past the horizon (also compacts the log and
        the index sidecars, and sweeps orphaned staging siblings).
 
+    On a clustered, version-logged layout with takedowns pending the
+    layout is measured BEFORE step 2. When the OPTIMIZE would then
+    rewrite every live file, steps 2 and 3 are ONE rewrite: the
+    takedown's staged swap takes every live file as its victim and
+    re-lays the survivors on the curve, reusing the z-values the
+    measuring scan computed (``apply_deletes(_relayout=...)``);
+    ``optimize`` then reports that rewrite with ``"fused": True``.
+    Otherwise the steps run in the order above, the layout measured
+    again after the apply; the measuring scan has refilled the z-range
+    manifest, so the apply keeps it exact and the second measurement
+    reads it.
+
     Returns a report dict with one entry per step that RAN:
     {"drift_reconciled": bool, "apply_deletes": {...}, "layout":
     {...}, "optimize": {...}, "vacuum": {...}} — absent key = surface
@@ -252,24 +266,53 @@ def maintain_dataset(
         report["drift_reconciled"] = (
             _vlog_reconcile(spark, path) is not None
         )
-    if _deletes_has_parts(spark, path):
+    zfs, zp = _hadoop_fs(spark, f"{path}/_zorder_meta/info")
+    clustered = zfs.exists(zp)
+    pending = _deletes_has_parts(spark, path)
+    snap = None  # the layout as measured, while no step has changed it
+    relayout = None
+    if clustered and pending and versioned:
+        snap = _layout_snapshot(spark, path, keep_rows=True)
+        fr = snap["ranges"]
+        if (
+            fr
+            and _layout_metrics(fr)["overlap_fraction"]
+            >= optimize_overlap_threshold
+            and _optimize_victims(fr) == snap["files"]
+        ):
+            relayout = snap
+    if pending:
         try:
             report["apply_deletes"] = apply_deletes(
-                spark, path, target_file_bytes=target_file_bytes
+                spark, path, target_file_bytes=target_file_bytes,
+                _relayout=relayout,
             )
         except retriable as e:
             report["apply_deletes"] = {"conflict": repr(e)}
-    zfs, zp = _hadoop_fs(spark, f"{path}/_zorder_meta/info")
-    if zfs.exists(zp):
-        layout = zorder_layout_stats(spark, path)
-        report["layout"] = layout
-        if layout["overlap_fraction"] >= optimize_overlap_threshold:
-            try:
-                report["optimize"] = optimize_incremental(
-                    spark, path, target_file_bytes=target_file_bytes
-                )
-            except retriable as e:
-                report["optimize"] = {"conflict": repr(e)}
+        snap = None  # the apply may have changed the file set
+    if clustered:
+        applied = report.get("apply_deletes", {})
+        if applied.get("relayout"):
+            report["layout"] = _layout_metrics(relayout["ranges"])
+            report["optimize"] = {
+                "rewritten_files": applied["rewritten_files"],
+                "new_files": applied["new_files"],
+                "kept_files": applied["kept_files"],
+                "fused": True,
+            }
+        else:
+            if snap is None:
+                snap = _layout_snapshot(spark, path)
+            layout = _layout_metrics(snap["ranges"])
+            report["layout"] = layout
+            if layout["overlap_fraction"] >= optimize_overlap_threshold:
+                try:
+                    report["optimize"] = optimize_incremental(
+                        spark, path, target_file_bytes=target_file_bytes,
+                        _layout=snap,
+                    )
+                except retriable as e:
+                    report["optimize"] = {"conflict": repr(e)}
     if versioned and (keep_last is not None or keep_seconds is not None):
         report["vacuum"] = vacuum_versions(
             spark, path,

@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from engage_spark.io import read_csv, write_parquet
+from engage_spark.session import cache_scope
 
 
 @dataclass
@@ -39,14 +40,15 @@ class Task:
 def _task_weather_forecast(spark: SparkSession, work_dir: str) -> None:
     from engage_spark.pipelines import weather_forecast
 
-    out = weather_forecast.run(
-        spark,
-        weather=read_csv(spark, f"{work_dir}/in/weather.csv"),
-        stations=read_csv(spark, f"{work_dir}/in/ghcnd_stations.csv"),
-        countries=read_csv(spark, f"{work_dir}/in/ghcnd_countries.csv"),
-    )
-    for name, df in out.items():
-        write_parquet(df, f"{work_dir}/weather_output/{name}")
+    with cache_scope():
+        out = weather_forecast.run(
+            spark,
+            weather=read_csv(spark, f"{work_dir}/in/weather.csv"),
+            stations=read_csv(spark, f"{work_dir}/in/ghcnd_stations.csv"),
+            countries=read_csv(spark, f"{work_dir}/in/ghcnd_countries.csv"),
+        )
+        for name, df in out.items():
+            write_parquet(df, f"{work_dir}/weather_output/{name}")
 
 
 def _task_covid_transform(spark: SparkSession, work_dir: str) -> None:
@@ -77,9 +79,10 @@ def _task_simulator(spark: SparkSession, work_dir: str) -> None:
     ds = spark.read.parquet(f"{work_dir}/dataset_full").withColumn(
         "date", F.col("date").cast("int")
     )
-    out = simulator.run(spark, ds)
-    for name, df in out.items():
-        write_parquet(df, f"{work_dir}/simulation_output/{name}")
+    with cache_scope():
+        out = simulator.run(spark, ds)
+        for name, df in out.items():
+            write_parquet(df, f"{work_dir}/simulation_output/{name}")
 
 
 TASKS: dict[str, Task] = {

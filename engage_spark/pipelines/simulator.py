@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from engage_spark.session import scoped_cache
 from engage_spark.queries.kernels import sir_simulate
 
 def _win():
@@ -334,11 +335,11 @@ def run(spark: SparkSession, dataset_full: DataFrame,
     # float values — re-executed aggregations can legally reorder FP
     # sums, and the SIR recurrence amplifies ulp-level input noise into
     # visible before/after divergence that isn't scenario effect.
-    feats = trim_and_lag(feats).cache()
+    feats = scoped_cache(trim_and_lag(feats))
     train = feats.filter((F.col("holdout") == 0) & F.col("d_removed").isNotNull())
 
-    coefs = fit_recover_coefs(train).cache()
-    r0 = estimate_r0(feats).cache()
+    coefs = scoped_cache(fit_recover_coefs(train))
+    r0 = scoped_cache(estimate_r0(feats))
     coefs.count(), r0.count()  # force materialization before the twin runs
 
     sim_before = simulate(feats, coefs, r0)

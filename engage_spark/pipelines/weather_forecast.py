@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from engage_spark.session import scoped_cache
 from engage_spark.queries.kernels import ar_fit_forecast, interpolate_series
 
 GROUP_KEYS = ["country", "state"]
@@ -186,7 +187,7 @@ def run(
     charts (weather_pred.py:342-347, one file per (country, state))
     via the S6 sink — deterministic SVG, matplotlib-free."""
     series = prepare_series(weather, stations, countries, min_last_date)
-    out = train_and_forecast(series).cache()
+    out = scoped_cache(train_and_forecast(series))
     pred_actual = out.filter(F.col("kind") == "pred_actual").select(
         "TAVG_actual", "TAVG_pred", "state", "date", "country"
     )

@@ -1062,13 +1062,19 @@ def x5_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization round); each branch's plan and rows are unchanged
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=2) as pool:
-        flex = pool.submit(api.bm25_topk, docs, queries, k=10)
+        flex = pool.submit(
+            inheritable_thread_target(api.bm25_topk), docs, queries, k=10
+        )
         fsem = pool.submit(
-            lambda: api.topk_cosine_search(
-                emb, emb.filter(F.col("vec_id") < 3), k=10
-            ).select(
-                "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
+            inheritable_thread_target(
+                lambda: api.topk_cosine_search(
+                    emb, emb.filter(F.col("vec_id") < 3), k=10
+                ).select(
+                    "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
+                )
             )
         )
         lex, sem = flex.result(), fsem.result()
@@ -1147,14 +1153,20 @@ def x5b_hybrid_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round; see x5_hybrid_rrf. Branch plans and rows are unchanged.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=2) as pool:
-        flex = pool.submit(api.bm25_topk, docs, queries, k=10)
+        flex = pool.submit(
+            inheritable_thread_target(api.bm25_topk), docs, queries, k=10
+        )
         fsem = pool.submit(
-            lambda: api.ivfpq_topk_search(
-                emb, emb.filter(F.col("vec_id") < 3), k=10,
-                rerank=_PQ_RERANK, n_rows=_corpus_rows(sf_dir),
-            ).select(
-                "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
+            inheritable_thread_target(
+                lambda: api.ivfpq_topk_search(
+                    emb, emb.filter(F.col("vec_id") < 3), k=10,
+                    rerank=_PQ_RERANK, n_rows=_corpus_rows(sf_dir),
+                ).select(
+                    "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
+                )
             )
         )
         lex, sem = flex.result(), fsem.result()

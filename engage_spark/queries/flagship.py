@@ -15,15 +15,24 @@ from engage_spark.io import table
 from engage_spark.registry import query
 
 
+# The oracles' fixed-point revenue sums S are exact BIGINTs; q1 and q3
+# round them half-up in integer arithmetic, ((S + 50) // 100 / 100.0 at
+# scale 10^4), which is the decimal result Spark's round() returns.
+# DuckDB's round() of the double S / 10000.0 can fall on the other side
+# of an exact half cent (S = 11062691784850 rounds to .48, Spark .49).
+# q5 and joins.j6 keep round(S / 10000.0, 2) because the benchmark's
+# oracle rewrite (benchmarks/wl_queries.py `oracle`) matches that text
+# and applies the same integer rounding.
 @query(
     "q1_pricing_summary",
     oracle="""
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2) AS sum_qty,
            round(sum(l_extendedprice), 2) AS sum_base_price,
-           round(sum(round(l_extendedprice * (1 - l_discount) * 10000)::BIGINT)::BIGINT / 10000.0, 2) AS sum_disc_price,
-           round(sum(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000)::BIGINT)::BIGINT / 1000000.0, 2)
-               AS sum_charge,
+           (sum(round(l_extendedprice * (1 - l_discount) * 10000)::BIGINT)::BIGINT + 50) // 100 / 100.0
+               AS sum_disc_price,
+           (sum(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000)::BIGINT)::BIGINT + 5000)
+               // 10000 / 100.0 AS sum_charge,
            round(avg(l_quantity) + 1e-9, 4) AS avg_qty,
            round(avg(l_extendedprice) + 1e-9, 4) AS avg_price,
            round(avg(l_discount) + 1e-9, 4) AS avg_disc,
@@ -65,8 +74,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT l_orderkey,
            strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-           round(sum(round(l_extendedprice * (1 - l_discount) * 10000)::BIGINT)::BIGINT
-                 / 10000.0, 2) AS revenue
+           (sum(round(l_extendedprice * (1 - l_discount) * 10000)::BIGINT)::BIGINT + 50)
+                 // 100 / 100.0 AS revenue
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey

@@ -1664,6 +1664,8 @@ def s17_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain-parquet oracle, proving the bucketed layout is lossless."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from engage_spark.io import write_bucketed
 
     ords = table(spark, sf_dir, "orders").filter(
@@ -1677,11 +1679,13 @@ def s17_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
             pool.submit(
-                write_bucketed, spark, ords, "s17_orders_b",
+                inheritable_thread_target(write_bucketed),
+                spark, ords, "s17_orders_b",
                 ["o_orderkey"], 8, path=_scratch("s17_orders_b"),
             ),
             pool.submit(
-                write_bucketed, spark, li, "s17_lineitem_b",
+                inheritable_thread_target(write_bucketed),
+                spark, li, "s17_lineitem_b",
                 ["l_orderkey"], 8, path=_scratch("s17_lineitem_b"),
             ),
         ]

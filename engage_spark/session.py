@@ -9,6 +9,8 @@ demotion), Arrow accelerates every pandas-kernel boundary.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import SparkSession
 
@@ -63,3 +65,38 @@ def local_frame(spark: SparkSession, rows, schema: str):
     names = [f.name for f in T._parse_datatype_string(schema).fields]
     pdf = pd.DataFrame(list(rows), columns=names)
     return spark.createDataFrame(pdf, schema)
+
+
+# the frames cached inside the innermost `cache_scope()` block
+_CACHE_SCOPE: ContextVar[list | None] = ContextVar(
+    "engage_cache_scope", default=None
+)
+
+
+def scoped_cache(df):
+    """``df.cache()``, released when the enclosing `cache_scope()`
+    block exits. A pipeline stage caches a frame that its lazy outputs
+    read, so the cache must outlive the stage's ``run()`` until the
+    caller has consumed those outputs; the caller opens the scope
+    around run-and-write. A cache left in the session would be matched
+    by plan, source paths included, and a later run over overwritten
+    inputs at the same paths would read the stale rows. Outside a
+    scope this is a plain ``df.cache()``, which the caller releases."""
+    df = df.cache()
+    frames = _CACHE_SCOPE.get()
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+@contextmanager
+def cache_scope():
+    """Unpersist every frame `scoped_cache` cached inside the block."""
+    frames: list = []
+    token = _CACHE_SCOPE.set(frames)
+    try:
+        yield
+    finally:
+        _CACHE_SCOPE.reset(token)
+        for df in frames:
+            df.unpersist()

@@ -159,22 +159,50 @@ def _publish_stash_exists(spark: SparkSession, path: str) -> bool:
     return bool(sfs.exists(sp))
 
 
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """`path` as an OS path when it lives on the local filesystem
+    (file://, or scheme-less under a local default FS), else None.
+    Memoized per session: the qualification costs four py4j round
+    trips, and the hot paths ask it of the same dataset roots."""
+    memo = spark.__dict__.setdefault("_engage_local_paths", {})
+    if path not in memo:
+        fs, p = _fs(spark, path)
+        uri = fs.makeQualified(p).toUri()
+        memo[path] = (
+            uri.getPath() if uri.getScheme() in (None, "file") else None
+        )
+    return memo[path]
+
+
 def version_log_enabled(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs(spark, f"{path}/{_VLOG}")
-    if fs.exists(p):
-        # the dir alone is not "enabled": a crashed version_log_enable
-        # can leave only its dot-claim behind (the claim's create
-        # makes parent dirs), and answering True then poisons every
-        # read AND the re-enable (review-found r15). Enabled = at
-        # least one real entry part (one listStatus, metadata-sized).
-        for st in fs.listStatus(p):
-            if not st.getPath().getName().startswith(("_", ".")):
-                return True
-        return False
+    # the dir alone is not "enabled": a crashed version_log_enable can
+    # leave only its dot-claim behind (the claim's create makes parent
+    # dirs), and answering True then poisons every read AND the
+    # re-enable (review-found r15). Enabled = at least one real entry
+    # part, from ONE listing (on file:// an os.listdir, with no py4j
+    # call per log file).
+    local = _local_path(spark, path)
+    if local is not None:
+        import os
+
+        try:
+            names = os.listdir(os.path.join(local, _VLOG))
+        except (FileNotFoundError, NotADirectoryError):
+            names = None
+    else:
+        fs, p = _fs(spark, f"{path}/{_VLOG}")
+        names = (
+            [st.getPath().getName() for st in fs.listStatus(p)]
+            if fs.exists(p)
+            else None
+        )
+    if names is not None:
+        return any(not n.startswith(("_", ".")) for n in names)
     # log absent: a crashed republish may have left it in the stash —
     # heal before answering (zero extra RPC on the common log-present
     # path; one exists() check on the log-absent path)
     if _heal_publish_stash(spark, path):
+        fs, p = _fs(spark, f"{path}/{_VLOG}")
         return fs.exists(p)
     return False
 
@@ -404,12 +432,10 @@ def _live_names(spark: SparkSession, path: str) -> list:
     errors stay LOUD on every scheme: a missing or unreadable dataset
     dir raises instead of returning a partial/empty list, which would
     otherwise let _vlog_reconcile log a bogus mass-removal entry."""
-    fs, p = _fs(spark, path)
-    uri = fs.makeQualified(p).toUri()
-    if uri.getScheme() in (None, "file"):
+    rootp = _local_path(spark, path)
+    if rootp is not None:
         import os
 
-        rootp = uri.getPath()
         if not os.path.isdir(rootp):
             raise FileNotFoundError(
                 f"dataset directory does not exist: {rootp}"
@@ -437,16 +463,20 @@ def _live_names(spark: SparkSession, path: str) -> list:
     # plan, no footer read) — the same listing staging commits use
     from engage_spark.io import _staged_rel_files
 
+    fs, p = _fs(spark, path)
     if not fs.exists(p):
         raise FileNotFoundError(f"dataset directory does not exist: {path}")
     return _staged_rel_files(spark, path)
 
 
 def _pa_dir_for(spark: SparkSession, dir_path: str):
-    """(pyarrow fs, in-fs path) for a sidecar DIRECTORY path."""
-    fs, p = _fs(spark, dir_path)
-    uri = fs.makeQualified(p).toUri().toString()
-    return _pa_fs_for(uri)
+    """(pyarrow fs, in-fs path) for a sidecar DIRECTORY path, memoized
+    per session (the qualification is three py4j round trips)."""
+    memo = spark.__dict__.setdefault("_engage_pa_dirs", {})
+    if dir_path not in memo:
+        fs, p = _fs(spark, dir_path)
+        memo[dir_path] = _pa_fs_for(fs.makeQualified(p).toUri().toString())
+    return memo[dir_path]
 
 
 def _pa_parts(pafs, pp: str) -> list:
@@ -471,19 +501,36 @@ def _pa_read_small(
     _stats_spec were read 3-4x per lifecycle query). Missing dir reads
     as []; None on ANY other failure — the caller's Spark read stays
     the fallback, never a different answer (guide §5: the driver
-    should not schedule distributed work for metadata-sized state)."""
+    should not schedule distributed work for metadata-sized state).
+
+    Parts are memoized per session like the log's
+    (``_vlog_part_memo``): sidecar parts are immutable and uniquely
+    named — writers add new parts and delete old ones — so a read
+    costs one listing plus the parts added since the last read of the
+    dir, keyed by (path, size, mtime) and bounded by the live parts.
+    The rows are shared with the memo: callers copy, never mutate."""
+    memo = spark.__dict__.setdefault("_engage_sidecar_parts", {})
+    key = (dir_path, tuple(columns) if columns is not None else None)
     try:
         import pyarrow.parquet as pq
 
         pafs, pp = _pa_dir_for(spark, dir_path)
+        seen = memo.get(key, {})
+        fresh: dict = {}
         rows: list = []
         for fi in _pa_parts(pafs, pp):
-            rows.extend(
-                pq.read_table(fi.path, filesystem=pafs, columns=columns)
-                .to_pylist()
-            )
+            part_key = (fi.path, fi.size, fi.mtime_ns)
+            part = seen.get(part_key)
+            if part is None:
+                part = pq.read_table(
+                    fi.path, filesystem=pafs, columns=columns
+                ).to_pylist()
+            fresh[part_key] = part
+            rows.extend(part)
+        memo[key] = fresh
         return rows
     except FileNotFoundError:
+        memo.pop(key, None)
         return []
     except Exception:  # noqa: BLE001 — fallback, never a wrong answer
         return None
@@ -624,13 +671,11 @@ def _vlog_rows_pa(spark: SparkSession, path: str) -> list | None:
     try:
         import pyarrow.parquet as pq
 
-        fs, p = _fs(spark, f"{path}/{_VLOG}")
-        uri = fs.makeQualified(p).toUri().toString()
-        pafs, pp = _pa_fs_for(uri)
+        pafs, pp = _pa_dir_for(spark, f"{path}/{_VLOG}")
         from pyarrow.fs import FileSelector
 
         infos = pafs.get_file_info(FileSelector(pp, recursive=False))
-        memo = _vlog_part_memo(spark).get(uri, {})
+        memo = _vlog_part_memo(spark).get(pp, {})
         fresh: dict = {}
         rows: list = []
         for fi in sorted(infos, key=lambda i: i.path):
@@ -643,7 +688,7 @@ def _vlog_rows_pa(spark: SparkSession, path: str) -> list | None:
                 part = pq.read_table(fi.path, filesystem=pafs).to_pylist()
             fresh[key] = part
             rows.extend(part)
-        _vlog_part_memo(spark)[uri] = fresh
+        _vlog_part_memo(spark)[pp] = fresh
         return rows
     except Exception:  # noqa: BLE001 — fallback, never a wrong answer
         return None

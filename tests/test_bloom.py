@@ -742,3 +742,37 @@ def test_vectorized_build_matches_legacy_positions():
             for pos in _bloom_positions(b, m, k):
                 legacy[pos >> 3] |= 1 << (pos & 7)
         assert bits == bytes(legacy)
+
+
+def test_arrow_bloom_build_matches_the_value_path():
+    """An Arrow integer or string column is canonicalized in Arrow; its
+    bloom is bit-identical to the value-by-value build of the same
+    values (NULLs skipped, non-ASCII strings as UTF-8), and a mixed-type
+    value list still builds value by value, with every type prefix
+    kept apart (int 5 and string "5" set different bits)."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from engage_spark.indexes import _bloom_positions
+
+    ints = [5, -(2**62), 0, None, 2**62, 42]
+    strs = ["5", "doc-1", None, "naïve", "日本", ""]
+    for typ, vals in ((pa.int64(), ints), (pa.int32(), [5, -7, None, 0]),
+                      (pa.string(), strs)):
+        arr = pa.array(vals, typ)
+        for fpp in (0.01, 0.2):
+            assert _build_bloom(arr, fpp) == _build_bloom(vals, fpp)
+            assert _build_bloom(pa.chunked_array([arr]), fpp) == _build_bloom(
+                vals, fpp
+            )
+    mixed = [5, "5", 5.0, 5.5, b"5", True, None, dt.date(2024, 1, 3)]
+    n, m, k, bits = _build_bloom(mixed, 0.01)
+    canon = [b for b in map(_bloom_key_bytes, mixed) if b is not None]
+    assert n == len(canon) == 7  # None skipped; int 5 == float 5.0 bytes
+    legacy = bytearray(m // 8)
+    for b in canon:
+        for pos in _bloom_positions(b, m, k):
+            legacy[pos >> 3] |= 1 << (pos & 7)
+    assert bits == bytes(legacy)
+    assert _bloom_key_bytes(5) != _bloom_key_bytes("5")

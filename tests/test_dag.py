@@ -107,3 +107,50 @@ def test_build_airflow_dag_without_airflow_raises_cleanly():
         pass
     with _pytest.raises(NotImplementedError, match="run_local"):
         build_airflow_dag("/tmp/nowhere")
+
+
+def _outputs_digest(work_dir: str) -> dict:
+    """{output: md5 of its sorted rows}, read with pyarrow (no job)."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for name in ("weather_output/future_pred", "dataset_full",
+                 "simulation_output/simulation"):
+        rows = sorted(map(repr, pq.read_table(f"{work_dir}/{name}").to_pylist()))
+        out[name] = hashlib.md5("\n".join(rows).encode()).hexdigest()
+    return out
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_rerun_over_overwritten_inputs_reads_the_new_inputs(spark, tmp_path):
+    """A stage's cached frames are released once its outputs are
+    written, so a second run_local in the same session over inputs
+    rewritten in place computes from the new inputs, like a run over
+    the same inputs at fresh paths; no cache outlives a run."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "benchmarks"))
+    import datagen
+
+    from engage_spark.pipelines.dag import run_local
+
+    spark.catalog.clearCache()  # frames other tests left cached
+    reused, fresh = str(tmp_path / "reused"), str(tmp_path / "fresh")
+    datagen.write_covid_inputs(datagen.covid_inputs(7, 4, 1), reused)
+    run_local(spark, reused)
+    assert _cache_is_empty(spark)
+    first = _outputs_digest(reused)
+    for d in (reused, fresh):
+        datagen.write_covid_inputs(datagen.covid_inputs(8, 4, 1), d)
+    run_local(spark, reused)
+    assert _cache_is_empty(spark)
+    second = _outputs_digest(reused)
+    run_local(spark, fresh)
+    assert second == _outputs_digest(fresh)
+    assert all(second[k] != first[k] for k in first)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from engage_spark.io import table
@@ -72,3 +73,23 @@ def test_tfidf_terms_oracle_matches_tokenizer_on_whitespace_edges(spark):
         got["n_terms"].tolist(),
         want["n_terms"].tolist(),
     )
+
+
+@pytest.mark.parametrize(
+    "name", ["x5_hybrid_rrf", "x5b_hybrid_ivfpq", "s17_bucketed_join"]
+)
+def test_helper_thread_jobs_carry_the_callers_job_group(spark, sf_dir, name):
+    """The retriever builds and bucketed writes run on pool threads;
+    every job they launch carries the caller's job group (Spark's group
+    is a thread-local property the threads must inherit)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"thread-groups-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        load_all()[name].fn(spark, sf_dir).collect()
+    finally:
+        sc.setJobGroup("thread-groups-idle", "idle")
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped

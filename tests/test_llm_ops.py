@@ -1458,8 +1458,10 @@ def test_bm25_topk_semantics_and_pruning(spark):
     assert sorted(r.doc_id for r in pruned) == [1, 2]  # docs 3,4 only match 'common'
 
     # r16 (ADVICE r15): with pruning on, the 1-row stats scalar feeds
-    # TWO broadcast sites and exchange reuse does not unify them — the
-    # cache must be in the plan so the corpus aggregate runs once
+    # TWO broadcast sites and exchange reuse does not unify them — a
+    # checkpoint must be in the plan so the corpus aggregate runs once;
+    # a local checkpoint, so nothing stays in the session's cache
+    spark.catalog.clearCache()
     plan = (
         api.bm25_topk(
             docs,
@@ -1469,7 +1471,8 @@ def test_bm25_topk_semantics_and_pruning(spark):
             max_df_fraction=0.5,
         )._jdf.queryExecution().executedPlan().toString()
     )
-    assert "InMemoryTableScan" in plan
+    assert "Scan ExistingRDD" in plan
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_hybrid_retrieval_example_composes_end_to_end(spark, tmp_path):

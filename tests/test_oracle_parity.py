@@ -42,3 +42,41 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert e.queries().keys() >= set(e.oracle_sql().keys())
+
+
+def test_fixed_point_oracles_round_half_cents_as_spark(spark):
+    """At seed 23 j6's NATION_17 revenue is the fixed-point sum
+    S = 11062691784850 (scale 10^4), an exact half cent. Spark's
+    round(S / 10000.0, 2) rounds the decimal form half-up to .49;
+    DuckDB's round() of the binary double gives .48. The q1 and q3
+    oracles round S half-up in integer arithmetic, which gives Spark's
+    value exactly, at scale 10^4 and at q1's 10^6."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    con = duckdb.connect()
+    for s, scale in ((11062691784850, 10_000), (1_005_000, 1_000_000)):
+        want = (
+            spark.range(1)
+            .select(F.round(F.lit(s) / float(scale), 2))
+            .first()[0]
+        )
+        binary, exact = con.execute(
+            f"SELECT round({s}::BIGINT / {scale}.0, 2), "
+            f"({s}::BIGINT + {scale // 200}) // {scale // 100} / 100.0"
+        ).fetchone()
+        assert exact == want and binary != want, (s, want, binary, exact)
+    reg = load_all()
+    oracles = {
+        n: " ".join(reg[n].oracle.split())
+        for n in ("q1_pricing_summary", "q3_shipping_priority")
+    }
+    assert "::BIGINT + 50) // 100 / 100.0 AS sum_disc_price" in oracles[
+        "q1_pricing_summary"
+    ]
+    assert "::BIGINT + 5000) // 10000 / 100.0 AS sum_charge" in oracles[
+        "q1_pricing_summary"
+    ]
+    assert "::BIGINT + 50) // 100 / 100.0 AS revenue" in oracles[
+        "q3_shipping_priority"
+    ]

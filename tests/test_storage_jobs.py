@@ -41,11 +41,11 @@ def _orders(spark, k0: int, n: int, salt: int = 0):
     )
 
 
-def _table(spark, tmp_path, rows: int = 2_000) -> str:
+def _table(spark, tmp_path, rows: int = 2_000, num_files: int = 4) -> str:
     path = str(tmp_path / f"orders_{next(_seq)}")
     io.zorder_write(
         spark, _orders(spark, 0, rows), path, ["o_orderkey", "o_custkey"],
-        num_files=4,
+        num_files=num_files,
     )
     versioning.version_log_enable(spark, path)
     stats.stats_enable(spark, path, ["o_custkey", "o_orderkey"])
@@ -115,12 +115,14 @@ def _step(spark, path: str, k0: int, step: int) -> dict:
 # data:
 # - zorder_append: the range-partition sample and the write;
 # - upsert_dataset: the batch's key-uniqueness check (2) and the merged
-#   rewrite (3, with its broadcast of the batch keys);
+#   rewrite (3, with its broadcast of the batch keys) — this batch is a
+#   Spark plan, not a local one (test_small_local_upsert_is_one_job);
 # - delete_rows: none, the 20-key batch is written with pyarrow;
 # - reads: none to plan, one to collect;
-# - maintain_dataset: apply_deletes' victim scan (2), survivor
-#   rewrite (2) and z-range scan of the rewritten files (2), then
-#   optimize's rewrite (2) and z-range scan (2).
+# - maintain_dataset: the layout scan (2), whose rows keep their
+#   z-values, then ONE rewrite that applies the takedowns and re-lays
+#   every file (the range sample and the write, 2); the rewrite
+#   observes the new files' z-ranges, so no scan refreshes them.
 EXPECTED_JOBS = [
     {
         "zorder_append": 2, "upsert_dataset": 5, "delete_rows": 0,
@@ -131,7 +133,7 @@ EXPECTED_JOBS = [
         "zorder_append": 2, "upsert_dataset": 5, "delete_rows": 0,
         "read_with_deletes": (0, 1), "read_keys": (0, 1),
         "read_where": (0, 1), "read_version": (0, 1),
-        "maintain_dataset": 10,
+        "maintain_dataset": 4,
     },
 ]
 
@@ -427,3 +429,217 @@ def test_ops_agree_with_every_fast_path_failing(spark, tmp_path, monkeypatch):
     assert [e["op"] for e in versioning._vlog_entries(spark, slow)] == [
         e["op"] for e in versioning._vlog_entries(spark, fast)
     ]
+
+
+def _local(df):
+    """`df` as a local batch: a LocalRelation, as createDataFrame of a
+    pandas frame makes it."""
+    return df.sparkSession.createDataFrame(df.toPandas(), df.schema)
+
+
+def _upserted(spark, base_rows: int, batch) -> tuple:
+    """Digest of the base table's rows with `batch` upserted on
+    o_orderkey (null-safe key match), computed without the engine."""
+    base = _orders(spark, 0, base_rows)
+    kept = base.join(
+        batch.select("o_orderkey"),
+        base["o_orderkey"].eqNullSafe(batch["o_orderkey"]),
+        "left_anti",
+    )
+    return _digest(kept.unionByName(batch))
+
+
+def test_small_local_upsert_is_one_job(spark, tmp_path):
+    """A createDataFrame batch with one integer key column, at most
+    _DELETES_LITERAL_MAX keys and no NULL key: the keys are checked on
+    the driver and the survivors filtered by a literal, so the upsert
+    launches only its write."""
+    path = _table(spark, tmp_path, rows=600)
+    upd = _local(_orders(spark, 500, 200, salt=3))  # 100 updates, 100 new
+    assert io._batch_keys(upd, ["o_orderkey"], True) is not None
+    _, jobs = _jobs(
+        spark, lambda: io.upsert_dataset(spark, path, upd, ["o_orderkey"])
+    )
+    assert jobs == 1
+    assert _digest(io.read_with_deletes(spark, path)) == _upserted(
+        spark, 600, upd
+    )
+
+
+def _null_key_batch(spark):
+    return _local(
+        _orders(spark, 500, 20).withColumn(
+            "o_orderkey",
+            F.when(F.col("o_orderkey") == 510, None).otherwise(
+                F.col("o_orderkey")
+            ),
+        )
+    )
+
+
+@pytest.mark.parametrize(
+    "case", ["null_key", "two_key_columns", "over_bound", "not_local"]
+)
+def test_upsert_fallbacks_keep_the_spark_path(
+    spark, tmp_path, monkeypatch, case
+):
+    """Outside the local-batch scope the upsert keeps its Spark plan:
+    the aggregation that checks key uniqueness, then the broadcast
+    anti-join (null-safe, so a NULL batch key still replaces a NULL
+    target key); the rows are the same either way."""
+    path = _table(spark, tmp_path, rows=600)
+    keys = ["o_orderkey"]
+    if case == "null_key":
+        upd = _null_key_batch(spark)
+    elif case == "two_key_columns":
+        upd, keys = _local(_orders(spark, 500, 200)), ["o_orderkey", "o_custkey"]
+    elif case == "over_bound":
+        upd = _local(_orders(spark, 500, io._DELETES_LITERAL_MAX + 1))
+    else:
+        upd = _orders(spark, 500, 200)
+    assert io._batch_keys(upd, keys, False) is None
+    literal = []
+    real = io._keys_in
+    monkeypatch.setattr(
+        io, "_keys_in", lambda *a, **k: literal.append(a) or real(*a, **k)
+    )
+    _, jobs = _jobs(spark, lambda: io.upsert_dataset(spark, path, upd, keys))
+    monkeypatch.undo()
+    # the uniqueness aggregation ran as a job, and no literal filter
+    # stood in for the anti-join
+    assert jobs > 1 and literal == []
+    if case != "two_key_columns":  # the model matches on o_orderkey
+        assert _digest(io.read_with_deletes(spark, path)) == _upserted(
+            spark, 600, upd
+        )
+
+
+def test_duplicate_key_raises_the_same_error_on_both_paths(spark, tmp_path):
+    path = _table(spark, tmp_path, rows=300)
+    dup = _orders(spark, 100, 3).unionByName(_orders(spark, 101, 1, salt=9))
+    local = _local(dup)
+    errors = []
+    for batch in (local, dup):
+        def run(batch=batch):
+            with pytest.raises(ValueError) as e:
+                io.upsert_dataset(spark, path, batch, ["o_orderkey"])
+            return str(e.value)
+
+        msg, jobs = _jobs(spark, run)
+        errors.append((msg, jobs > 0))
+    want = (
+        "updates batch has multiple rows for key [101]; upsert semantics "
+        "need one row per key (delete rows included)"
+    )
+    # the local batch is checked on the driver, the other by a job
+    assert errors == [(want, False), (want, True)]
+
+
+def _history(spark, path: str, upto: int) -> list:
+    return [
+        _digest(versioning.read_version(spark, path, v))
+        for v in range(1, upto + 1)
+    ]
+
+
+def test_fused_maintenance_matches_apply_then_optimize(spark, tmp_path):
+    """When the OPTIMIZE due would rewrite every file, maintain_dataset
+    applies the takedowns in that same rewrite. The result equals
+    apply_deletes followed by optimize_incremental: the same live rows
+    (raw and through the sidecar), the same history, the sidecar
+    settled, the layout repaired — and a key re-appended after its
+    delete is removed with it, as apply_deletes removes it."""
+    paths = []
+    for _ in range(2):
+        # one file, so the upsert's rewrite of it spans the whole curve
+        # and every later file overlaps it
+        p = _table(spark, tmp_path, rows=2_000, num_files=1)
+        io.upsert_dataset(spark, p, _orders(spark, 1_990, 40, salt=1), ["o_orderkey"])
+        io.delete_rows(spark, p, [5, 6, 7, 1_995], "o_orderkey")
+        io.zorder_append(spark, _orders(spark, 5, 1, salt=2), p)  # key 5 again
+        io.zorder_append(spark, _orders(spark, 3_000, 50), p)
+        paths.append(p)
+    fused, split = paths
+    v0 = versioning.latest_version(spark, fused)
+    report = maintenance.maintain_dataset(spark, fused)
+    assert report["apply_deletes"]["relayout"] and report["optimize"]["fused"]
+    assert report["apply_deletes"]["deleted_keys"] == 4
+    io.apply_deletes(spark, split)
+    io.optimize_incremental(spark, split)
+    for read in (io.read_with_deletes, lambda s, p: s.read.parquet(p)):
+        assert _digest(read(spark, fused)) == _digest(read(spark, split))
+    assert io.read_with_deletes(spark, fused).filter("o_orderkey = 5").count() == 0
+    assert _history(spark, fused, v0) == _history(spark, split, v0)
+    latest = [versioning.latest_version(spark, p) for p in paths]
+    assert latest == [v0 + 1, v0 + 2]  # one commit, not two
+    assert _digest(versioning.read_version(spark, fused, latest[0])) == _digest(
+        versioning.read_version(spark, split, latest[1])
+    )
+    for p, v in zip(paths, latest):
+        assert not io._deletes_has_parts(spark, p)
+        assert versioning._pending_delete_versions(
+            versioning._vlog_entries(spark, p), v
+        ) == []
+        assert io.zorder_layout_stats(spark, p)["overlap_fraction"] == 0.0
+
+
+def test_observed_zranges_equal_a_scan(spark, tmp_path):
+    """The z-range manifest entries a rewrite or an append records from
+    its write's observed per-task ranges equal a fresh scan's."""
+    path = _table(spark, tmp_path, rows=2_000, num_files=1)
+    io.upsert_dataset(spark, path, _orders(spark, 1_990, 40, salt=1), ["o_orderkey"])
+    io.delete_rows(spark, path, [5, 6], "o_orderkey")
+    report = maintenance.maintain_dataset(spark, path, target_file_bytes=20_000)
+    assert report["optimize"]["fused"] and report["optimize"]["new_files"] > 1
+    assert sorted(io._zranges_read(spark, path)) == sorted(io._zranges_scan(spark, path))
+    io.zorder_append(spark, _orders(spark, 3_000, 300), path, num_files=2)
+    assert sorted(io._zranges_read(spark, path)) == sorted(io._zranges_scan(spark, path))
+    assert io._written_zranges(["part-00001-x.parquet"], {0: (1, 2)}) is None
+
+
+def test_sidecar_part_memo_matches_a_fresh_read(spark, tmp_path):
+    """Memoized sidecar reads equal fresh reads after another session
+    (with its own memo) commits new sidecar parts."""
+    from engage_spark.indexes import _VBLOOM
+    from engage_spark.stats import _VSTATS
+
+    path = _table(spark, tmp_path, rows=300)
+    dirs = [(f"{path}/{_VBLOOM}", None), (f"{path}/{_VSTATS}", None),
+            (f"{path}/{_VBLOOM}", ["name", "col"])]
+    warm = [versioning._pa_read_small(spark, d, c) for d, c in dirs]
+    other = spark.newSession()
+    io.zorder_append(other, _orders(other, 1_000, 50), path)
+    memo = spark.__dict__["_engage_sidecar_parts"]
+    for (d, c), before in zip(dirs, warm):
+        again = versioning._pa_read_small(spark, d, c)
+        saved = dict(memo)
+        memo.clear()
+        try:
+            fresh = versioning._pa_read_small(spark, d, c)
+        finally:
+            memo.clear()
+            memo.update(saved)
+        assert _canon(again) == _canon(fresh)
+        assert len(again) > len(before)
+
+
+def test_version_log_enabled_reads_one_listing(spark, tmp_path, monkeypatch):
+    """On file:// the answer is one os listing: once the dataset root
+    is resolved, no py4j call per log file (or at all)."""
+    path = _table(spark, tmp_path, rows=200)
+    for i in range(3):
+        io.delete_rows(spark, path, [i], "o_orderkey")
+    assert versioning.version_log_enabled(spark, path)
+    calls = []
+    real = versioning._fs
+    monkeypatch.setattr(
+        versioning, "_fs", lambda *a: calls.append(a) or real(*a)
+    )
+    assert versioning.version_log_enabled(spark, path)
+    assert calls == []
+    monkeypatch.undo()
+    claim = tmp_path / "claim_only" / "_versions" / "log"
+    claim.mkdir(parents=True)
+    (claim / ".v1.claim").write_text("")
+    assert not versioning.version_log_enabled(spark, str(tmp_path / "claim_only"))
+    assert not versioning.version_log_enabled(spark, str(tmp_path / "no_log"))

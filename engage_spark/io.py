@@ -1074,7 +1074,7 @@ def compact_dataset(
 def zorder_sql_fragment(scaled_names: Sequence[str], bits: int = 16) -> str:
     """ANSI/DuckDB SQL expression interleaving the bits of the given
     pre-scaled integer columns into one Z-value (Morton code) — the
-    exact mirror of ``zorder_column`` so the layout's key function is
+    exact mirror of ``_interleave_sql`` so the layout's key function is
     oracle-checkable."""
     n = len(scaled_names)
     terms = [
@@ -1085,40 +1085,14 @@ def zorder_sql_fragment(scaled_names: Sequence[str], bits: int = 16) -> str:
     return " + ".join(terms)
 
 
-def zorder_column(scaled_cols, bits: int = 16):
-    """Spark Column interleaving pre-scaled integer columns into a
-    Z-value. Pure JVM integer arithmetic (shift/and/add) — whole-stage
-    codegen, no UDF.
-
-    Accepts column NAMES (preferred) or Column objects. The name form
-    compiles the whole interleave to ONE parsed SQL expression — a
-    single py4j call, where the Column-object formulation paid ~5 py4j
-    round trips per bit-term (bits * n_cols terms; measured ~0.6 s of
-    pure driver time per call at bits=16 — r15 optimization round,
-    guide §5: driver-side fixed costs). The parsed expression tree is
-    identical (same shiftleft/shiftright/& ops, same left-assoc sum),
-    so the physical plan and every computed value are unchanged."""
-    import functools
-    import operator
-
-    if all(isinstance(c, str) for c in scaled_cols):
-        return F.expr(
-            _interleave_sql([f"`{c}`" for c in scaled_cols], bits)
-        )
-    n = len(scaled_cols)
-    terms = [
-        F.shiftleft(
-            F.shiftright(c, b).bitwiseAND(F.lit(1)).cast("long"), n * b + i
-        )
-        for b in range(bits)
-        for i, c in enumerate(scaled_cols)
-    ]
-    return functools.reduce(operator.add, terms)
-
-
 def _interleave_sql(scaled_sql: Sequence[str], bits: int) -> str:
-    """The Morton interleave of `zorder_column` over SQL operands
-    (quoted column names or whole scaling expressions)."""
+    """Spark SQL interleaving the bits of pre-scaled integer operands
+    (quoted column names or whole scaling expressions) into one
+    Z-value: pure integer shift/and/add, whole-stage codegen, no UDF.
+    Parsed as ONE expression — a single py4j call, where a Column
+    built term by term paid ~5 py4j round trips per bit-term (bits *
+    n_cols terms; measured ~0.6 s of pure driver time per call at
+    bits=16, r15 optimization round)."""
     n = len(scaled_sql)
     return " + ".join(
         f"shiftleft(cast((shiftright({q}, {b}) & 1) as bigint), {n * b + i})"
@@ -3416,7 +3390,10 @@ def _keys_in(col: str, keys, negate: bool = False):
     (Column.isin costs two py4j calls per key). Strings are written as
     UTF-8 hex binary literals cast back to string, so no value can
     break the quoting; the optimizer folds them into plain literals,
-    which push into the parquet scan."""
+    which push into the parquet scan. An empty `keys` lists nothing:
+    every row is out of it (SQL has no empty IN list)."""
+    if not keys:
+        return F.lit(negate)
 
     def lit(k) -> str:
         if isinstance(k, str):

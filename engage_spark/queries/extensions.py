@@ -1066,10 +1066,11 @@ def x5_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         flex = pool.submit(
-            inheritable_thread_target(api.bm25_topk), docs, queries, k=10
+            inheritable_thread_target(spark)(api.bm25_topk),
+            docs, queries, k=10,
         )
         fsem = pool.submit(
-            inheritable_thread_target(
+            inheritable_thread_target(spark)(
                 lambda: api.topk_cosine_search(
                     emb, emb.filter(F.col("vec_id") < 3), k=10
                 ).select(
@@ -1157,10 +1158,11 @@ def x5b_hybrid_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         flex = pool.submit(
-            inheritable_thread_target(api.bm25_topk), docs, queries, k=10
+            inheritable_thread_target(spark)(api.bm25_topk),
+            docs, queries, k=10,
         )
         fsem = pool.submit(
-            inheritable_thread_target(
+            inheritable_thread_target(spark)(
                 lambda: api.ivfpq_topk_search(
                     emb, emb.filter(F.col("vec_id") < 3), k=10,
                     rerank=_PQ_RERANK, n_rows=_corpus_rows(sf_dir),

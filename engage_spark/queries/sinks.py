@@ -407,7 +407,7 @@ from engage_spark.io import zorder_sql_fragment as _zfrag  # noqa: E402
 # scaling (// is DuckDB integer division; `div` on the Spark side —
 # identical on the non-negative operands scaling produces) and the
 # same generated bit-interleave expression (zorder_sql_fragment /
-# zorder_column are twins), so the layout's key function is
+# io._interleave_sql are twins), so the layout's key function is
 # hash-verified end to end, through a disk roundtrip.
 _S10_ORACLE = f"""
 WITH src AS (
@@ -1679,12 +1679,12 @@ def s17_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
             pool.submit(
-                inheritable_thread_target(write_bucketed),
+                inheritable_thread_target(spark)(write_bucketed),
                 spark, ords, "s17_orders_b",
                 ["o_orderkey"], 8, path=_scratch("s17_orders_b"),
             ),
             pool.submit(
-                inheritable_thread_target(write_bucketed),
+                inheritable_thread_target(spark)(write_bucketed),
                 spark, li, "s17_lineitem_b",
                 ["l_orderkey"], 8, path=_scratch("s17_lineitem_b"),
             ),

@@ -466,6 +466,16 @@ def test_small_local_upsert_is_one_job(spark, tmp_path):
     )
 
 
+def test_empty_local_upsert_keeps_every_row(spark, tmp_path):
+    # an empty batch lists no keys: the literal filter keeps every row
+    path = _table(spark, tmp_path, rows=300)
+    empty = _local(_orders(spark, 500, 3)).filter(F.col("o_orderkey") < 0)
+    assert io._batch_keys(empty, ["o_orderkey"], True) == []
+    before = _digest(io.read_with_deletes(spark, path))
+    io.upsert_dataset(spark, path, empty, ["o_orderkey"])
+    assert _digest(io.read_with_deletes(spark, path)) == before
+
+
 def _null_key_batch(spark):
     return _local(
         _orders(spark, 500, 20).withColumn(

@@ -1510,7 +1510,6 @@ def _write_z_layout(
     part_cols: list,
     mode: str,
     path: str,
-    materialized: bool = False,
     ranges: bool = False,
 ) -> dict | None:
     """The one layout-producing write every zorder path shares:
@@ -1522,8 +1521,6 @@ def _write_z_layout(
     frame lacks some partition values would silently leave those dirs
     on the PREVIOUS frozen curve while the meta says otherwise.
 
-    `materialized`: `out` already reads a checkpoint (the maintenance
-    pass's scaled snapshot), so it is not checkpointed again.
     `ranges`: on a flat layout, the write also observes each task's
     (min, max) ``__z`` — each task writes one file, so these are the
     written files' exact z-ranges — and returns {task partition id:
@@ -1541,8 +1538,7 @@ def _write_z_layout(
     # sf1 s10b 5.73→4.97 / s15 5.01→4.68 — the executor-local write of
     # the scaled rows costs less than the second compute at both
     # scales, and the gap widens with data size.
-    if not materialized:
-        out = out.localCheckpoint(eager=False)
+    out = out.localCheckpoint(eager=False)
     laid = out.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
     obs = None
     if ranges and not part_cols and n <= _ZRANGES_OBSERVE_MAX:
@@ -1576,10 +1572,13 @@ def _write_z_layout(
 
 
 # `_write_z_layout` observes per-file z-ranges with two aggregate
-# expressions per task; a rewrite into more files than this refreshes
-# the z-range manifest with the increment scan instead, so the
-# observed aggregate stays small
-_ZRANGES_OBSERVE_MAX = 64
+# expressions per task; a write into more files than this refreshes
+# the z-range manifest with the increment scan instead. Measured on
+# zorder_append (4-core VM, local[4], medians of 4 alternating pairs,
+# observed write vs write + scan): 20k rows, 8 files 0.70 vs 0.82 s,
+# 16 files 1.04 vs 0.91 s, 64 files 2.48 vs 1.83 s; 200k rows, 8 files
+# 0.96 vs 1.08 s, 12 files 1.15 vs 1.02 s
+_ZRANGES_OBSERVE_MAX = 8
 
 _PART_ID_RE = re.compile(r"(?:^|-)part-(\d+)-")
 
@@ -2005,19 +2004,11 @@ def zorder_append(
 _ZRANGES = "_zorder_ranges"
 
 
-def _zranges_scan(
-    spark: SparkSession, path: str, only_files=None, keep: bool = False
-):
+def _zranges_scan(spark: SparkSession, path: str, only_files=None) -> list:
     """Exact [(file_uri, z_lo, z_hi)] by recomputing every row's
     Z-value with the FROZEN meta over the whole dataset (or over
     `only_files` — the increment-sized maintenance case), scanned with
-    the log's schema. With `keep` (whole-dataset scans only) it returns
-    (ranges, scaled): `scaled` is the lazily checkpointed frame the
-    ranges were reduced from — every row with its ``__z`` and
-    ``__file``, read with mergeSchema where the log has no stable
-    schema — which this scan's own job materializes, so a rewrite in
-    the same maintenance pass reuses the z-values instead of rescaling
-    every row."""
+    the log's schema."""
     from engage_spark.versioning import _logged_reader
 
     m = zorder_meta(spark, path)
@@ -2027,18 +2018,15 @@ def _zranges_scan(
         _logged_reader(spark, path, drop=tuple(m["part_cols"]))
         .parquet(*sorted(only_files))
         if only_files
-        else _logged_reader(spark, path, merge=keep).parquet(path)
+        else _logged_reader(spark, path).parquet(path)
     )
     z = _zorder_scale_frozen(
         spark, src.withColumn("__file", F.input_file_name()), path, m
     )
-    if keep:
-        z = z.localCheckpoint(eager=False)
     per_file = z.groupBy("__file").agg(
         F.min("__z").alias("z_lo"), F.max("__z").alias("z_hi")
     ).collect()  # bounded: one row per data file
-    out = [(r["__file"], int(r.z_lo), int(r.z_hi)) for r in per_file]
-    return (out, z) if keep else out
+    return [(r["__file"], int(r.z_lo), int(r.z_hi)) for r in per_file]
 
 
 def _zranges_write(spark: SparkSession, path: str, rows: list) -> None:
@@ -2146,31 +2134,24 @@ def _zorder_file_ranges(spark: SparkSession, path: str) -> list:
     return _layout_snapshot(spark, path)["ranges"]
 
 
-def _layout_snapshot(
-    spark: SparkSession, path: str, keep_rows: bool = False
-) -> dict:
+def _layout_snapshot(spark: SparkSession, path: str) -> dict:
     """`_zorder_file_ranges` as maintain_dataset's layout snapshot:
-    {"ranges", "files" (the current file URIs), "scaled"}. With
-    `keep_rows`, a recompute scan keeps its checkpointed rows with
-    their z-values as "scaled" (`_zranges_scan(keep=True)`) for a
-    rewrite in the same pass; "scaled" is None when the manifest
-    answered or `keep_rows` is off."""
+    {"ranges", "files" (the current file URIs)}."""
     from engage_spark.versioning import _live_names
 
     if not _live_names(spark, path):
-        return {"ranges": [], "files": set(), "scaled": None}
+        return {"ranges": [], "files": set()}
     current = _input_files(spark, path)
     man = _zranges_read(spark, path)
     if man is not None and {f for f, _, _ in man} == current:
-        return {"ranges": man, "files": current, "scaled": None}
+        return {"ranges": man, "files": current}
     # mismatch (or no manifest): one exact scan rebuilds it. A ZERO-ROW
     # part file can never enter the manifest (input_file_name sees no
     # rows), so a dataset containing one keeps taking this scan path —
     # correct, just uncached; compaction removes such debris.
-    out = _zranges_scan(spark, path, keep=keep_rows)
-    out, scaled = out if keep_rows else (out, None)
+    out = _zranges_scan(spark, path)
     _zranges_write(spark, path, out)
-    return {"ranges": out, "files": current, "scaled": scaled}
+    return {"ranges": out, "files": current}
 
 
 def zorder_layout_stats(spark: SparkSession, path: str) -> dict:
@@ -2354,9 +2335,8 @@ def optimize_incremental(
     OPTIMIZE runs must never silently queue for hours).
 
     ``_layout`` is maintain_dataset's layout snapshot
-    (``_layout_snapshot``), measured just before: the
-    first attempt takes its victims from it and, when it holds the
-    scan's scaled rows, re-lays them without rescaling."""
+    (``_layout_snapshot``), measured just before: the first attempt
+    takes its victims from it; a retry measures the live state again."""
     from engage_spark.versioning import (
         _live_names,
         _vlog_reconcile,
@@ -2396,6 +2376,7 @@ def optimize_incremental(
             # the new state (a partial staging dir is vacuum-swept by
             # age)
             if _attempt < occ_retries and _is_missing_file_error(e):
+                _layout = None
                 continue
             raise
         if st["staging"] is None:  # nothing overlaps: no commit
@@ -2608,22 +2589,14 @@ def _optimize_stage(
     staging = (
         f"{path.rstrip('/')}{_OPTIMIZE_STAGING_INFIX}{_uuid.uuid4().hex[:12]}"
     )
-    scaled = layout["scaled"] if layout is not None else None
-    if scaled is not None:
-        # the layout scan's rows already carry their z-values
-        if victims != layout["files"]:
-            scaled = scaled.filter(_keys_in("__file", victims))
-        out = scaled.drop("__file")
-    else:
-        from engage_spark.versioning import _logged_reader
+    from engage_spark.versioning import _logged_reader
 
-        victim_src = _logged_reader(
-            spark, path, base_path=path, merge=True
-        ).parquet(*sorted(victims))
-        out = _zorder_scale_frozen(spark, victim_src, path, m)
+    victim_src = _logged_reader(
+        spark, path, base_path=path, merge=True
+    ).parquet(*sorted(victims))
     zranges = _write_z_layout(
-        out, n_new, part_cols, "overwrite", staging,
-        materialized=scaled is not None, ranges=man_live,
+        _zorder_scale_frozen(spark, victim_src, path, m),
+        n_new, part_cols, "overwrite", staging, ranges=man_live,
     )
     from engage_spark.versioning import _relativize
 
@@ -3524,8 +3497,8 @@ def apply_deletes(
     (``_layout_snapshot``) when the incremental OPTIMIZE
     due next would rewrite every live file: the first attempt then
     takes every live file as a victim, with no detect scan, and re-lays
-    the survivors on the curve from the snapshot's scaled rows — the
-    takedown and the OPTIMIZE in ONE rewrite and one
+    the survivors on the curve — the takedown and the OPTIMIZE in ONE
+    rewrite and one
     ``vacuum_deletes`` commit, under this op's conflict rule. The
     report then adds ``new_files`` and ``relayout``."""
     if not _deletes_has_parts(spark, path):
@@ -3750,17 +3723,13 @@ def _applydv_write_survivors(
     per_key: dict,
     target_file_bytes: int,
     staging: str,
-    scaled: DataFrame | None = None,
 ) -> dict | None:
     """Shared survivor rewrite: re-read ONLY the victims (basePath:
     hive-partitioned victims must keep their partition column values —
     the ADVICE r12 silent-data-loss shape; mergeSchema: victims
     spanning an s11-style evolution keep the union schema), anti-join
     every key batch, and re-lay on the frozen Z-curve / back into the
-    partition dirs as the dataset's layout demands. `scaled` is a
-    fused pass's checkpointed scan of every victim row with its
-    ``__z`` (and ``__file``): the survivors are filtered from it and
-    re-laid without rescaling. Returns a flat z-layout write's
+    partition dirs as the dataset's layout demands. Returns a flat z-layout write's
     observed per-task z-ranges (`_write_z_layout`), else None."""
     import math
 
@@ -3776,13 +3745,9 @@ def _applydv_write_survivors(
     ]
     from engage_spark.versioning import _logged_reader
 
-    kept_rows = (
-        scaled.drop("__file")
-        if scaled is not None
-        else _logged_reader(
-            spark, path, base_path=path, merge=True
-        ).parquet(*victims)
-    )
+    kept_rows = _logged_reader(
+        spark, path, base_path=path, merge=True
+    ).parquet(*victims)
     for c, kdf in per_key.items():
         if not isinstance(kdf, list):
             kept_rows = kept_rows.join(
@@ -3797,10 +3762,8 @@ def _applydv_write_survivors(
         # and later zorder_appends keep the same layout contract
         m = zorder_meta(spark, path)
         _write_z_layout(
-            kept_rows if scaled is not None
-            else _zorder_scale_frozen(spark, kept_rows, path, m),
+            _zorder_scale_frozen(spark, kept_rows, path, m),
             n_new, part_cols, "overwrite", staging,
-            materialized=scaled is not None,
         )
     elif part_cols:
         # one task per (shuffle slot) grouped on the partition columns
@@ -3816,10 +3779,8 @@ def _applydv_write_survivors(
         # later zorder_appends see the same layout contract
         m = zorder_meta(spark, path)
         return _write_z_layout(
-            kept_rows if scaled is not None
-            else _zorder_scale_frozen(spark, kept_rows, path, m),
-            n_new, [], "overwrite", staging,
-            materialized=scaled is not None, ranges=True,
+            _zorder_scale_frozen(spark, kept_rows, path, m),
+            n_new, [], "overwrite", staging, ranges=True,
         )
     else:
         kept_rows.coalesce(n_new).write.mode("overwrite").parquet(staging)
@@ -3940,7 +3901,7 @@ def _applydv_stage(
                 "all_files": set(files),
             }
     fused = det is not None
-    if det is None:
+    if not fused:
         det = _applydv_detect(spark, path)
     st = {
         "pinned_v": pinned_v,
@@ -3965,8 +3926,7 @@ def _applydv_stage(
         f"{path.rstrip('/')}{_APPLYDV_STAGING_INFIX}{_uuid.uuid4().hex[:12]}"
     )
     zranges = _applydv_write_survivors(
-        spark, path, det["victims"], det["per_key"], target_file_bytes,
-        staging, scaled=relayout["scaled"] if fused else None,
+        spark, path, det["victims"], det["per_key"], target_file_bytes, staging
     )
     st.update(
         staging=staging,

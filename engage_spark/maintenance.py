@@ -230,8 +230,7 @@ def maintain_dataset(
     layout is measured BEFORE step 2. When the OPTIMIZE would then
     rewrite every live file, steps 2 and 3 are ONE rewrite: the
     takedown's staged swap takes every live file as its victim and
-    re-lays the survivors on the curve, reusing the z-values the
-    measuring scan computed (``apply_deletes(_relayout=...)``);
+    re-lays the survivors on the curve (``apply_deletes(_relayout=...)``);
     ``optimize`` then reports that rewrite with ``"fused": True``.
     Otherwise the steps run in the order above, the layout measured
     again after the apply; the measuring scan has refilled the z-range
@@ -241,12 +240,14 @@ def maintain_dataset(
     Returns a report dict with one entry per step that RAN:
     {"drift_reconciled": bool, "apply_deletes": {...}, "layout":
     {...}, "optimize": {...}, "vacuum": {...}} — absent key = surface
-    absent or below threshold. ``drift_reconciled`` means a drift
-    reconcile ENTRY was written; crashed-writer manifest replays
-    happen implicitly inside the reconcile and are deliberately not a
-    separate signal (they log their own exact op entries —
-    dataset_history shows them). A step that loses its optimistic
-    race repeatedly (TakedownConflict / OptimizeConflict) or finds
+    absent or below threshold. ``layout`` is the measurement the
+    OPTIMIZE decision was made from: taken after the apply when the
+    steps run in order, before it when they are fused.
+    ``drift_reconciled`` means a drift reconcile ENTRY was written;
+    crashed-writer manifest replays happen implicitly inside the
+    reconcile and are deliberately not a separate signal (they log
+    their own exact op entries — dataset_history shows them). A step
+    that loses its optimistic race repeatedly (TakedownConflict / OptimizeConflict) or finds
     the lease held records {"conflict": ...} under its key and the
     LATER steps still run (review-found: propagating would starve the
     retention vacuum on a permanently-hot dataset); anything else
@@ -269,10 +270,9 @@ def maintain_dataset(
     zfs, zp = _hadoop_fs(spark, f"{path}/_zorder_meta/info")
     clustered = zfs.exists(zp)
     pending = _deletes_has_parts(spark, path)
-    snap = None  # the layout as measured, while no step has changed it
     relayout = None
     if clustered and pending and versioned:
-        snap = _layout_snapshot(spark, path, keep_rows=True)
+        snap = _layout_snapshot(spark, path)
         fr = snap["ranges"]
         if (
             fr
@@ -289,7 +289,6 @@ def maintain_dataset(
             )
         except retriable as e:
             report["apply_deletes"] = {"conflict": repr(e)}
-        snap = None  # the apply may have changed the file set
     if clustered:
         applied = report.get("apply_deletes", {})
         if applied.get("relayout"):
@@ -301,8 +300,8 @@ def maintain_dataset(
                 "fused": True,
             }
         else:
-            if snap is None:
-                snap = _layout_snapshot(spark, path)
+            # measured again: the apply may have changed the file set
+            snap = _layout_snapshot(spark, path)
             layout = _layout_metrics(snap["ranges"])
             report["layout"] = layout
             if layout["overlap_fraction"] >= optimize_overlap_threshold:

@@ -119,10 +119,10 @@ def _step(spark, path: str, k0: int, step: int) -> dict:
 #   Spark plan, not a local one (test_small_local_upsert_is_one_job);
 # - delete_rows: none, the 20-key batch is written with pyarrow;
 # - reads: none to plan, one to collect;
-# - maintain_dataset: the layout scan (2), whose rows keep their
-#   z-values, then ONE rewrite that applies the takedowns and re-lays
-#   every file (the range sample and the write, 2); the rewrite
-#   observes the new files' z-ranges, so no scan refreshes them.
+# - maintain_dataset: the layout scan (2), then ONE rewrite that
+#   applies the takedowns and re-lays every file (the range sample and
+#   the write, 2); the rewrite observes the new files' z-ranges, so no
+#   scan refreshes them.
 EXPECTED_JOBS = [
     {
         "zorder_append": 2, "upsert_dataset": 5, "delete_rows": 0,
@@ -593,6 +593,24 @@ def test_fused_maintenance_matches_apply_then_optimize(spark, tmp_path):
         assert io.zorder_layout_stats(spark, p)["overlap_fraction"] == 0.0
 
 
+def test_optimize_retry_measures_the_live_layout(spark, tmp_path):
+    """A layout snapshot whose victims a file-moving commit removed
+    before the stage makes the first attempt fail on a missing file;
+    the retry measures the live layout again and succeeds."""
+    path = _table(spark, tmp_path, rows=2_000, num_files=1)
+    io.upsert_dataset(spark, path, _orders(spark, 1_990, 40, salt=1), ["o_orderkey"])
+    io.zorder_append(spark, _orders(spark, 3_000, 50), path)
+    stale = io._layout_snapshot(spark, path)
+    assert len(io._optimize_victims(stale["ranges"])) >= 2
+    io.optimize_incremental(spark, path)  # removes the snapshot's victims
+    io.zorder_append(spark, _orders(spark, 4_000, 50), path)
+    before = _digest(spark.read.parquet(path))
+    report = io.optimize_incremental(spark, path, _layout=stale)
+    assert report["rewritten_files"] >= 2
+    assert _digest(spark.read.parquet(path)) == before
+    assert io.zorder_layout_stats(spark, path)["overlap_fraction"] == 0.0
+
+
 def test_observed_zranges_equal_a_scan(spark, tmp_path):
     """The z-range manifest entries a rewrite or an append records from
     its write's observed per-task ranges equal a fresh scan's."""
@@ -603,6 +621,10 @@ def test_observed_zranges_equal_a_scan(spark, tmp_path):
     assert report["optimize"]["fused"] and report["optimize"]["new_files"] > 1
     assert sorted(io._zranges_read(spark, path)) == sorted(io._zranges_scan(spark, path))
     io.zorder_append(spark, _orders(spark, 3_000, 300), path, num_files=2)
+    assert sorted(io._zranges_read(spark, path)) == sorted(io._zranges_scan(spark, path))
+    # past the bound the write observes nothing and the new files are scanned
+    wide = io._ZRANGES_OBSERVE_MAX + 1
+    io.zorder_append(spark, _orders(spark, 4_000, 30 * wide), path, num_files=wide)
     assert sorted(io._zranges_read(spark, path)) == sorted(io._zranges_scan(spark, path))
     assert io._written_zranges(["part-00001-x.parquet"], {0: (1, 2)}) is None
 

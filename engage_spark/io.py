@@ -3498,9 +3498,8 @@ def apply_deletes(
     due next would rewrite every live file: the first attempt then
     takes every live file as a victim, with no detect scan, and re-lays
     the survivors on the curve — the takedown and the OPTIMIZE in ONE
-    rewrite and one
-    ``vacuum_deletes`` commit, under this op's conflict rule. The
-    report then adds ``new_files`` and ``relayout``."""
+    rewrite and one ``vacuum_deletes`` commit, under this op's conflict
+    rule. The report then adds ``new_files`` and ``relayout``."""
     if not _deletes_has_parts(spark, path):
         return {"deleted_keys": 0, "rewritten_files": 0, "kept_files": 0}
     from engage_spark.versioning import (
@@ -3729,8 +3728,9 @@ def _applydv_write_survivors(
     the ADVICE r12 silent-data-loss shape; mergeSchema: victims
     spanning an s11-style evolution keep the union schema), anti-join
     every key batch, and re-lay on the frozen Z-curve / back into the
-    partition dirs as the dataset's layout demands. Returns a flat z-layout write's
-    observed per-task z-ranges (`_write_z_layout`), else None."""
+    partition dirs as the dataset's layout demands. Returns a flat
+    z-layout write's observed per-task z-ranges (`_write_z_layout`),
+    else None."""
     import math
 
     from engage_spark.versioning import _relativize
